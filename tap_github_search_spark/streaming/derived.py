@@ -284,6 +284,10 @@ def staged_root_keys(spark: SparkSession, main: MicroLakeTable,
     )
 
 
+#: largest key frame ``maybe_broadcast`` hints as a broadcast (0: never)
+BROADCAST_KEYS = 1_000_000
+
+
 def maybe_broadcast(df: DataFrame, n: int | None = None) -> DataFrame:
     """Broadcast a key frame only when it is provably small (VERDICT
     r3 minor #5 / r5 #2+#4): an unconditional broadcast OOMs the
@@ -293,7 +297,7 @@ def maybe_broadcast(df: DataFrame, n: int | None = None) -> DataFrame:
     pass ``n`` when the caller already counted (persisted frames).
     Above the threshold the join falls back to a plain shuffle join,
     which is exactly right for a big key set."""
-    limit = int(os.environ.get("SPARK_GRAFT_BROADCAST_KEYS", "1000000"))
+    limit = BROADCAST_KEYS
     if limit <= 0:
         return df
     if n is None:
@@ -308,8 +312,8 @@ def bucket_ids_of(keys_df: DataFrame, key: str,
     on a persisted frame). The ids feed ``snapshot_df(buckets=...)``
     so maintainer probe reads touch O(affected) files instead of
     O(table) (VERDICT r5 #1). Returns None (= no pruning) when every
-    bucket is affected or pruning is disabled
-    (``SPARK_GRAFT_BUCKET_PRUNE=0``)."""
+    bucket is affected: a restriction to all of them would prune
+    nothing."""
     return count_and_buckets(keys_df, key, n_buckets)[1]
 
 
@@ -322,7 +326,6 @@ def count_and_buckets(keys_df: DataFrame, key: str, n_buckets: int
     sparse epoch). ``collect_set`` state is bounded by n_buckets.
     Also materializes a persisted frame as a side effect (it is the
     first action on it)."""
-    prune = os.environ.get("SPARK_GRAFT_BUCKET_PRUNE", "1") != "0"
     row = keys_df.agg(
         F.count(F.lit(1)).alias("_n"),
         F.collect_set(
@@ -330,8 +333,6 @@ def count_and_buckets(keys_df: DataFrame, key: str, n_buckets: int
         ).alias("_bs"),
     ).first()
     n = int(row["_n"])
-    if not prune:
-        return n, None
     ids = sorted(int(b) for b in row["_bs"])
     return n, (None if len(ids) >= n_buckets else ids)
 
@@ -355,7 +356,6 @@ class EpochContext:
         self._root: DataFrame | None = None
         self._n_root: int | None = None
         self._buckets: list[int] | None = None
-        self._buckets_set = False
         self._dirty: DataFrame | None = None
 
     @property
@@ -369,7 +369,6 @@ class EpochContext:
             self._n_root, self._buckets = count_and_buckets(
                 self._root, self.main.keys[0], self.main.n_buckets
             )
-            self._buckets_set = True
         return self._root
 
     @property
@@ -431,13 +430,6 @@ class DerivedChain:
         ]
 
     # ---------------- affected-key propagation ----------------
-
-    def affected_root_keys(self, epoch: int) -> DataFrame:
-        """Distinct level-1 keys staged in the given epoch (see
-        ``staged_root_keys``); the behind set is this chain's tables."""
-        behind = [t.path for t in self.tables
-                  if t.last_committed_epoch < epoch]
-        return staged_root_keys(self.spark, self.main, epoch, behind)
 
     def _pre_epoch_version(self, table: MicroLakeTable,
                            epoch: int) -> MicroLakeTable | None:
@@ -516,23 +508,19 @@ class DerivedChain:
         propagation and the merge — un-persisted, each consumer
         re-evaluated the whole upstream probe scan. ``ctx`` supplies
         the cross-maintainer shared frames (root keys + level-1 dirty
-        rows) when several maintainers ride the same epoch."""
+        rows) when several maintainers ride the same epoch; without
+        one the chain builds its own and releases it on return."""
+        own_ctx = ctx is None
+        if own_ctx:
+            behind = [t.path for t in self.tables
+                      if t.last_committed_epoch < epoch]
+            ctx = EpochContext(self.spark, self.main, epoch, behind)
         pinned: list[DataFrame] = []
         try:
-            if ctx is not None:
-                affected = ctx.root_keys
-                n_aff = ctx.n_root_keys
-                buckets = ctx.root_buckets
-                buckets_nb = self.main.n_buckets
-            else:
-                affected = self.affected_root_keys(epoch).persist()
-                pinned.append(affected)
-                # one fused job: materialize + count + bucket ids
-                n_aff, buckets = count_and_buckets(
-                    affected, self.main.keys[0], self.main.n_buckets
-                )
-                buckets_nb = self.main.n_buckets
-            dirty_live = ctx.dirty_live if ctx is not None else None
+            affected = ctx.root_keys
+            n_aff = ctx.n_root_keys
+            buckets = ctx.root_buckets
+            buckets_nb = self.main.n_buckets
             first: MergeResult | None = None
             parent: MicroLakeTable = self.main
             parent_key = self.main.keys[0]
@@ -554,13 +542,8 @@ class DerivedChain:
                         affected, spec.key, table.n_buckets
                     )
                     buckets_nb = table.n_buckets
-                    dirty_live = None
-                res = self._apply_level(
-                    i, epoch, affected, n_aff,
-                    buckets=buckets if i == 0 else None,
-                    pre_joined=dirty_live if i == 0 else None,
-                )
-                dirty_live = None
+                res = self._apply_level(i, epoch, affected, n_aff,
+                                        ctx=ctx if i == 0 else None)
                 if first is None:
                     first = res
                 parent, parent_key = table, spec.key
@@ -568,29 +551,25 @@ class DerivedChain:
         finally:
             for df in pinned:
                 df.unpersist()
+            if own_ctx:
+                ctx.release()
 
     def _apply_level(self, i: int, epoch: int, affected: DataFrame,
                      n_aff: int | None = None,
-                     buckets: list[int] | None = None,
-                     pre_joined: DataFrame | None = None) -> MergeResult:
+                     ctx: EpochContext | None = None) -> MergeResult:
         """Recompute one level's affected keys from the parent's live
         state and MERGE them (level epoch == parent epoch, same fence
-        semantics). ``buckets`` prunes the parent read when the level
-        joins on the parent's bucketing key (level 1); ``pre_joined``
-        short-circuits the probe with the epoch's shared dirty-rows
-        frame (EpochContext)."""
+        semantics). A level keyed on the main table's merge key (level
+        1 without ``key_expr``) reads the epoch's shared, bucket-pruned
+        dirty-rows frame from ``ctx`` instead of probing."""
         spec, table = self.specs[i], self.tables[i]
         if epoch <= table.last_committed_epoch:
             return MergeResult(epoch=epoch, skipped=True)
         parent = self.main if i == 0 else self.tables[i - 1]
-        if pre_joined is not None and spec.key_expr is None:
-            live = pre_joined
+        if ctx is not None and spec.key_expr is None:
+            live = ctx.dirty_live
         else:
-            live = parent.snapshot_df(
-                buckets=buckets if spec.key_expr is None else None
-            )
-            if spec.key_expr is not None:
-                live = self._attach_key(live, spec)
+            live = self._attach_key(parent.snapshot_df(), spec)
             # Only affected keys are read back; a small affected set is
             # broadcast so the probe stays local, a bulk-epoch set falls
             # back to a shuffle join (maybe_broadcast guard).
@@ -836,9 +815,6 @@ class RollupMaintainer:
     @property
     def tables(self) -> list[MicroLakeTable]:
         return self.chain.tables
-
-    def affected_conv_ids(self, epoch: int) -> DataFrame:
-        return self.chain.affected_root_keys(epoch)
 
     def apply_epoch(self, epoch: int,
                     ctx: "EpochContext | None" = None) -> MergeResult:

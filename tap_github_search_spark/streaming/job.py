@@ -481,7 +481,7 @@ def stream(
         # chaos soak showed that swallowing leaves a level
         # permanently behind once the checkpoint commits. The
         # nothing-staged case (empty epoch / vacuumed old stage) is
-        # handled inside affected_root_keys, which returns an empty
+        # handled inside staged_root_keys, which returns an empty
         # key frame so each level fence-advances with an empty
         # merge.
         running = [

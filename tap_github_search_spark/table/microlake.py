@@ -44,7 +44,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -85,6 +85,11 @@ class MergeResult:
 
 class MicroLakeTable:
     """One keyed upsert table rooted at ``path``."""
+
+    #: expected distinct keys per data file, sizing the parquet-native
+    #: bloom filter ``_write`` attaches to the primary key (0 disables);
+    #: ≈ the per-bucket key count at the target bucket size
+    BLOOM_NDV = 100_000
 
     def __init__(self, spark: SparkSession, path: str, manifest: dict):
         self.spark = spark
@@ -267,10 +272,8 @@ class MicroLakeTable:
         answers the point-membership question those keys need, is
         checked by the parquet reader itself during row-group filtering
         (no engine code on the read path), and costs ~1.2 bytes/key in
-        the file. ``SPARK_GRAFT_BLOOM_NDV`` sizes it per file (0
-        disables; default 100k ≈ the per-bucket key count at the target
-        bucket size). Iceberg exposes the identical knob as
-        write.parquet.bloom-filter-enabled.column.*."""
+        the file. ``BLOOM_NDV`` sizes it per file. Iceberg exposes the
+        identical knob as write.parquet.bloom-filter-enabled.column.*."""
         out = self._cluster_sorted(df)
         renames = {
             l: p for l, p in self._mapping().items()
@@ -279,7 +282,7 @@ class MicroLakeTable:
         if renames:  # files always carry PHYSICAL names (see _mapping)
             out = out.withColumnsRenamed(renames)
         w = out.write.mode("overwrite")
-        ndv = int(os.environ.get("SPARK_GRAFT_BLOOM_NDV", "100000"))
+        ndv = self.BLOOM_NDV
         if ndv > 0:
             k = self._physical(self.keys[0])
             w = (
@@ -598,21 +601,106 @@ class MicroLakeTable:
 
         Physical strategy (stage-then-rewrite, chosen after profiling —
         a cache-winners-then-union plan serializes on the columnar
-        cache and rewrites every batch bucket):
+        cache and rewrites every batch bucket), in four phases:
 
-        1. **Stage**: dedup + transform the batch winners and write them
-           straight to ``data/epoch=N`` bucket-partitioned — one full
-           pass, no ``persist``.
-        2. **Lineage**: aggregate per-bucket stats from a column-pruned
-           scan of the *staged* files (reads 3 skinny columns).
-        3. **Rewrite**: only buckets that BOTH received batch rows AND
-           already hold table data are merged (staged ∪ old → LWW) into
-           ``data/epoch=N.rw``; staged files of non-overlapping buckets
-           are referenced as-is. An insert-only epoch rewrites nothing.
+        1. ``_merge_stage``: guard, dedup and transform the batch
+           winners, write them to ``data/epoch=N`` — one pass, no persist.
+        2. ``_merge_quarantine``: dead-letter the expectation violators.
+        3. ``_merge_lineage``: per-bucket lineage summed from the staged
+           files' parquet footers — no Spark job.
+        4. ``_merge_rewrite_or_append``: CoW merges (staged ∪ old → LWW)
+           only buckets holding both; MOR appends the staged files.
         """
         t0 = time.monotonic()
         if epoch <= self.last_committed_epoch:
             return MergeResult(epoch=epoch, skipped=True)
+        base_accept, rule_fail = self._merge_guards(
+            batch_df, max_payload_bytes, expectations
+        )
+        evolved, commit_tag, staged_files, counts = self._merge_stage(
+            batch_df, epoch, base_accept, rule_fail, winner_transform, dedup
+        )
+        if quarantine_dir and counts["events_quarantined"]:
+            self._merge_quarantine(batch_df, epoch, base_accept, rule_fail,
+                                   quarantine_dir)
+        lin_rows = self._merge_lineage(staged_files)
+        files, read_dedup = self._merge_rewrite_or_append(
+            epoch, commit_tag, staged_files, evolved, merge_mode
+        )
+
+        events_in = counts["events_in"]
+        rows_applied = sum(r["rows_applied"] for r in lin_rows)
+        rows_deleted = sum(r["rows_deleted"] for r in lin_rows)
+        merge_ms = int((time.monotonic() - t0) * 1000)
+        committed_at = _utcnow_iso()
+        lineage = [
+            {"commit_epoch": epoch, **r, "committed_at": committed_at}
+            for r in lin_rows
+        ]
+        metrics = {
+            "commit_epoch": epoch,
+            "events_in": events_in,
+            "events_rejected": counts["events_rejected"],
+            "events_deduped": int(rows_applied + rows_deleted),
+            "merge_ms": merge_ms,
+            "throughput_eps": (events_in * 1000.0 / merge_ms) if merge_ms else 0.0,
+        }
+        if expectations:
+            metrics["events_quarantined"] = counts["events_quarantined"]
+            metrics["quarantine_rules"] = counts["quarantine_rules"]
+        self._commit(epoch, files, lineage, metrics, evolved,
+                     read_dedup=read_dedup, extra=extra_manifest,
+                     op=("merge",))
+        return MergeResult(
+            epoch=epoch,
+            events_in=events_in,
+            rows_applied=rows_applied,
+            rows_deleted=rows_deleted,
+            buckets_touched=len(lin_rows),
+            merge_ms=merge_ms,
+            lineage=lineage,
+            events_quarantined=counts["events_quarantined"],
+        )
+
+    def _merge_guards(self, batch_df: DataFrame,
+                      max_payload_bytes: int | None,
+                      expectations: dict[str, str] | None
+                      ) -> tuple[Column, dict[str, Column]]:
+        """Stage guards: ``base_accept`` rejects malformed events (null
+        merge keys or ``op`` — neither upsert nor delete — and oversize
+        payloads) instead of poisoning the bucket layout; ``rule_fail``
+        maps each expectation to its violation predicate. Reference
+        analog: the tap's tolerated error responses."""
+        base_accept = F.col("op").isNotNull()
+        for k in self.keys:
+            base_accept = base_accept & F.col(k).isNotNull()
+        if max_payload_bytes is not None and "text" in batch_df.columns:
+            base_accept = base_accept & (
+                F.coalesce(F.octet_length("text"), F.lit(0))
+                <= F.lit(int(max_payload_bytes))
+            )
+        rule_fail: dict[str, Column] = {}
+        if expectations:
+            is_delete = F.coalesce(F.col("op") == "D", F.lit(False))
+            for name, pred in expectations.items():
+                rule_fail[name] = ~is_delete & ~F.coalesce(
+                    F.expr(pred), F.lit(False)
+                )
+        return base_accept, rule_fail
+
+    def _merge_stage(self, batch_df: DataFrame, epoch: int,
+                     base_accept: Column, rule_fail: dict[str, Column],
+                     winner_transform, dedup: str
+                     ) -> tuple[T.StructType, str, list[dict], dict]:
+        """Phase 1: within-batch LWW dedup + winner-only transform,
+        staged straight to parquet. The `_cluster` repartition is the
+        ONLY shuffle: the window dedup reuses its clustering (Catalyst
+        elides the Exchange and pushes a WindowGroupLimit rank-limit
+        into the sort), and bucket == partition id, so `partitionBy`
+        writes one bucket directory per task. All counts ride one
+        Observation on the write — the WAL batch is scanned once.
+        Returns (evolved schema, commit tag, staged files, counts)."""
+        from pyspark.sql import Observation
 
         plan = self._evolve_schema(batch_df.schema)
         widen = {f.name: f for kind, f in plan if kind == "widen"}
@@ -620,42 +708,9 @@ class MicroLakeTable:
             [widen.get(f.name, f) for f in self.schema.fields]
             + [f for kind, f in plan if kind == "add"]
         )
-        payload_names = [f.name for f in evolved.fields]
-
-        # 1. Within-batch LWW dedup + winner-only transform (vectorized
-        #    normalize), staged directly to parquet. The `_cluster`
-        #    repartition is the ONLY shuffle in the whole stage path:
-        #    the window dedup reuses its clustering (Catalyst elides the
-        #    Exchange and pushes a WindowGroupLimit rank-limit into the
-        #    sort), and because bucket == partition id, `partitionBy`
-        #    writes exactly one bucket directory per task.
-        # Reject malformed events (null merge keys; oversize payloads
-        # when capped) instead of poisoning the bucket layout. BOTH the
-        # input count and the valid count ride one Observation on the
-        # staged write — the WAL batch is scanned exactly once (a
-        # separate `batch_df.count()` would double read amplification
-        # on the hottest path in the engine). Reference analog:
-        # tolerated error responses
-        # (/root/reference/tap_github/client.py:324-370).
-        from pyspark.sql import Observation
-
-        accept = F.lit(True)
-        for k in self.keys:
-            accept = accept & F.col(k).isNotNull()
-        if max_payload_bytes is not None and "text" in batch_df.columns:
-            accept = accept & (
-                F.coalesce(F.octet_length("text"), F.lit(0))
-                <= F.lit(int(max_payload_bytes))
-            )
-        base_accept = accept
-        rule_fail: dict[str, F.Column] = {}
-        if expectations:
-            is_delete = F.coalesce(F.col("op") == "D", F.lit(False))
-            for name, pred in expectations.items():
-                rule_fail[name] = ~is_delete & ~F.coalesce(
-                    F.expr(pred), F.lit(False)
-                )
-                accept = accept & ~rule_fail[name]
+        accept = base_accept
+        for fail in rule_fail.values():
+            accept = accept & ~fail
         obs = Observation(f"merge_obs_{epoch}_{uuid.uuid4().hex[:6]}")
         valid = batch_df.observe(
             obs,
@@ -691,13 +746,10 @@ class MicroLakeTable:
             ],
             F.col("seq").alias("_seq"),
             (F.col("op") == "D").alias("_deleted"),
-            # r06: NULL-unless-deleted marker — the parquet footer's
-            # null_count then equals the file's LIVE row count, which
-            # (with the _seq zone) lets commit derive the per-bucket
-            # lineage from the footer stats it already reads, instead
-            # of a second Spark scan of the staged files (one job per
-            # merge — the dominant fixed cost of small derived-level
-            # epochs). Never part of the logical schema (META_COLS).
+            # NULL-unless-deleted marker: the footer's null_count is
+            # then the file's LIVE row count, which _merge_lineage
+            # reads instead of scanning. Staged files only; never part
+            # of the logical schema (META_COLS).
             F.when(F.col("op") == "D", F.lit(1)).alias("_del1"),
         ).withColumn("_bucket", self._bucket_expr(self.keys[0]))
 
@@ -706,82 +758,75 @@ class MicroLakeTable:
         # (the manifest CAS alone fires too late to protect files)
         commit_tag = uuid.uuid4().hex[:8]
         stage_name = f"epoch={epoch}-{commit_tag}"
-        stage_dir = os.path.join(self.path, "data", stage_name)
-        self._write(store).parquet(stage_dir)
+        self._write(store).parquet(os.path.join(self.path, "data",
+                                                stage_name))
         staged_files = self._list_epoch_files(stage_name)
-        events_in = int(obs.get["n_in"])
-        events_rejected = events_in - int(obs.get["n_base"])
-        events_quarantined = int(obs.get["n_base"]) - int(obs.get["n_valid"])
-        quarantine_rules = {
-            name: int(obs.get[f"q_{i}"])
-            for i, name in enumerate(rule_fail)
+        n_in, n_base = int(obs.get["n_in"]), int(obs.get["n_base"])
+        counts = {
+            "events_in": n_in,
+            "events_rejected": n_in - n_base,
+            "events_quarantined": n_base - int(obs.get["n_valid"]),
+            "quarantine_rules": {
+                name: int(obs.get[f"q_{i}"])
+                for i, name in enumerate(rule_fail)
+            },
         }
-        if quarantine_dir and events_quarantined:
-            # dead-letter retention: second WAL scan, only on epochs
-            # with violations; overwrite-into-epoch-dir is replay-safe
-            any_fail = F.lit(False)
-            for fail in rule_fail.values():
-                any_fail = any_fail | fail
-            failed_arr = F.array_compact(F.array(*[
-                F.when(fail, F.lit(name))
-                for name, fail in rule_fail.items()
-            ]))
-            (
-                batch_df.filter(base_accept & any_fail)
-                .withColumn("_failed", failed_arr)
-                .withColumn("_commit_epoch", F.lit(epoch).cast("long"))
-                .write.mode("overwrite")
-                .parquet(os.path.join(quarantine_dir, f"epoch={epoch}"))
-            )
+        return evolved, commit_tag, staged_files, counts
 
-        # 2. Per-bucket lineage. Fast path (r06): every staged file's
-        #    footer already yields rows, a _seq zone and (via the
-        #    _del1 null-count trick) its live-row count — so the
-        #    per-bucket aggregate is driver arithmetic over the stats
-        #    _list_epoch_files collected, no second Spark scan. Files
-        #    missing any stat (stats disabled, exotic writer) fall
-        #    back to the original column-pruned scan.
-        lin_rows: list[dict] = []
-        if staged_files and all(
-            "seq_min" in f and "live_rows" in f and "rows" in f
-            for f in staged_files
-        ):
-            per_bucket: dict[int, dict] = {}
-            for f in staged_files:
-                b = per_bucket.setdefault(f["bucket"], {
-                    "_bucket": f["bucket"],
-                    "seq_min": f["seq_min"], "seq_max": f["seq_max"],
-                    "rows_applied": 0, "rows_deleted": 0,
-                })
-                b["seq_min"] = min(b["seq_min"], f["seq_min"])
-                b["seq_max"] = max(b["seq_max"], f["seq_max"])
-                b["rows_applied"] += int(f["live_rows"])
-                b["rows_deleted"] += int(f["rows"]) - int(f["live_rows"])
-            lin_rows = [per_bucket[b] for b in sorted(per_bucket)]
-        elif staged_files:
-            lin_rows = [
-                r.asDict()
-                for r in self.spark.read.parquet(stage_dir)
-                .groupBy("_bucket")
-                .agg(
-                    F.min("_seq").alias("seq_min"),
-                    F.max("_seq").alias("seq_max"),
-                    F.count(F.when(~F.col("_deleted"), 1))
-                    .alias("rows_applied"),
-                    F.count(F.when(F.col("_deleted"), 1))
-                    .alias("rows_deleted"),
-                )
-                .collect()
-            ]
-        affected = sorted(int(r["_bucket"]) for r in lin_rows)
+    def _merge_quarantine(self, batch_df: DataFrame, epoch: int,
+                          base_accept: Column,
+                          rule_fail: dict[str, Column],
+                          quarantine_dir: str) -> None:
+        """Phase 2: dead-letter retention of expectation violators — a
+        second WAL scan, run only on epochs with violations; the
+        overwrite into the epoch dir is replay-safe."""
+        any_fail = F.lit(False)
+        for fail in rule_fail.values():
+            any_fail = any_fail | fail
+        failed_arr = F.array_compact(F.array(*[
+            F.when(fail, F.lit(name))
+            for name, fail in rule_fail.items()
+        ]))
+        (
+            batch_df.filter(base_accept & any_fail)
+            .withColumn("_failed", failed_arr)
+            .withColumn("_commit_epoch", F.lit(epoch).cast("long"))
+            .write.mode("overwrite")
+            .parquet(os.path.join(quarantine_dir, f"epoch={epoch}"))
+        )
 
-        # 3. Rewrite only buckets overlapping existing data (CoW), or
-        #    append the staged generation and defer to read-time (MOR).
-        old_by_bucket: dict[int, list[dict]] = {}
-        for f in self.manifest["files"]:
-            old_by_bucket.setdefault(f["bucket"], []).append(f)
-        overlap = {b for b in affected if b in old_by_bucket}
+    @staticmethod
+    def _merge_lineage(staged_files: list[dict]) -> list[dict]:
+        """Phase 3: per-bucket lineage from the staged files' footer
+        stats (rows, ``_seq`` zone, ``_del1`` live count). The stage
+        wrote these files one call earlier, so a missing stat is a
+        fault: raise before anything commits."""
+        need = ("rows", "seq_min", "seq_max", "live_rows")
+        missing = [f["path"] for f in staged_files
+                   if any(k not in f for k in need)]
+        if missing:
+            raise RuntimeError(f"staged files lack {need}: {missing[:3]}")
+        per_bucket: dict[int, dict] = {}
+        for f in staged_files:
+            b = per_bucket.setdefault(f["bucket"], {
+                "partition_id": f["bucket"],
+                "seq_min": f["seq_min"], "seq_max": f["seq_max"],
+                "rows_applied": 0, "rows_deleted": 0,
+            })
+            b["seq_min"] = min(b["seq_min"], f["seq_min"])
+            b["seq_max"] = max(b["seq_max"], f["seq_max"])
+            b["rows_applied"] += int(f["live_rows"])
+            b["rows_deleted"] += int(f["rows"]) - int(f["live_rows"])
+        return [per_bucket[b] for b in sorted(per_bucket)]
 
+    def _merge_rewrite_or_append(self, epoch: int, commit_tag: str,
+                                 staged_files: list[dict],
+                                 evolved: T.StructType, merge_mode: str
+                                 ) -> tuple[list[dict], bool]:
+        """Phase 4: the new manifest file list and ``read_dedup`` flag.
+        CoW rewrites only buckets overlapping existing data (an
+        insert-only epoch rewrites nothing); MOR (or a pending spec
+        migration) appends the staged generation."""
         read_dedup = bool(self.manifest.get("read_dedup"))
         if self.manifest.get("migration_pending"):
             # during progressive spec migration the table is effective
@@ -791,20 +836,18 @@ class MicroLakeTable:
             # readers keep resolving LWW until migrate_step finishes
             merge_mode = "mor"
             read_dedup = True
+        old = self.manifest["files"]
+        overlap = ({f["bucket"] for f in staged_files}
+                   & {f["bucket"] for f in old})
         if merge_mode == "mor":
-            keep = list(self.manifest["files"])
-            new_files = list(staged_files)
-            read_dedup = read_dedup or bool(overlap)
-            overlap = set()
-
-        else:
-            keep = [f for f in self.manifest["files"]
-                    if f["bucket"] not in overlap]
-            new_files = [f for f in staged_files if f["bucket"] not in overlap]
-
+            return old + staged_files, read_dedup or bool(overlap)
+        keep = [f for f in old if f["bucket"] not in overlap]
+        new_files = [f for f in staged_files if f["bucket"] not in overlap]
         if overlap:
-            old_files = [f for b in overlap for f in old_by_bucket[b]]
-            staged_overlap = [f for f in staged_files if f["bucket"] in overlap]
+            payload_names = [f.name for f in evolved.fields]
+            old_files = [f for f in old if f["bucket"] in overlap]
+            staged_overlap = [f for f in staged_files
+                              if f["bucket"] in overlap]
 
             def as_events(df: DataFrame) -> DataFrame:
                 return df.select(
@@ -830,49 +873,11 @@ class MicroLakeTable:
                 (F.col("op") == "D").alias("_deleted"),
             ).withColumn("_bucket", self._bucket_expr(self.keys[0]))
             rw_name = f"epoch={epoch}-{commit_tag}.rw"
-            rw_dir = os.path.join(self.path, "data", rw_name)
-            self._write(rewrite).parquet(rw_dir)
+            self._write(rewrite).parquet(
+                os.path.join(self.path, "data", rw_name)
+            )
             new_files += self._list_epoch_files(rw_name)
-
-        rows_applied = sum(r["rows_applied"] for r in lin_rows)
-        rows_deleted = sum(r["rows_deleted"] for r in lin_rows)
-        merge_ms = int((time.monotonic() - t0) * 1000)
-        lineage = [
-            {
-                "commit_epoch": epoch,
-                "partition_id": int(r["_bucket"]),
-                "seq_min": int(r["seq_min"]),
-                "seq_max": int(r["seq_max"]),
-                "rows_applied": int(r["rows_applied"]),
-                "rows_deleted": int(r["rows_deleted"]),
-                "committed_at": _utcnow_iso(),
-            }
-            for r in lin_rows
-        ]
-        metrics = {
-            "commit_epoch": epoch,
-            "events_in": int(events_in),
-            "events_rejected": events_rejected,
-            "events_deduped": int(rows_applied + rows_deleted),
-            "merge_ms": merge_ms,
-            "throughput_eps": (events_in * 1000.0 / merge_ms) if merge_ms else 0.0,
-        }
-        if expectations:
-            metrics["events_quarantined"] = events_quarantined
-            metrics["quarantine_rules"] = quarantine_rules
-        self._commit(epoch, keep + new_files, lineage, metrics, evolved,
-                     read_dedup=read_dedup, extra=extra_manifest,
-                     op=("merge",))
-        return MergeResult(
-            epoch=epoch,
-            events_in=events_in,
-            rows_applied=rows_applied,
-            rows_deleted=rows_deleted,
-            buckets_touched=len(affected),
-            merge_ms=merge_ms,
-            lineage=lineage,
-            events_quarantined=events_quarantined,
-        )
+        return keep + new_files, read_dedup
 
     # ---------------- maintenance ----------------
 
@@ -1500,16 +1505,20 @@ class MicroLakeTable:
         except OSError:
             pass
 
-        def _zone(md, col: str) -> tuple | None:
+        def _stats(md, col: str) -> list | None:
+            """The column's per-row-group statistics (None: absent)."""
             idx = next(
                 (i for i in range(md.num_columns)
                  if md.schema.column(i).name == col), None
             )
             if idx is None:
                 return None
+            return [md.row_group(rg).column(idx).statistics
+                    for rg in range(md.num_row_groups)]
+
+        def _zone(md, col: str) -> tuple | None:
             lo = hi = None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
+            for st in _stats(md, col) or []:
                 if st is None or not st.has_min_max:
                     return None
                 mn, mx = st.min, st.max
@@ -1537,38 +1546,29 @@ class MicroLakeTable:
             sz = _zone(md, "_seq")
             if sz is not None:
                 out["seq_min"], out["seq_max"] = int(sz[0]), int(sz[1])
-            # live rows via the _del1 null-count trick (see merge):
-            # _del1 is NULL exactly on live rows, so summing the
-            # column's null_count over row groups counts them — which
-            # turns commit-time lineage into pure footer arithmetic
-            didx = next(
-                (i for i in range(md.num_columns)
-                 if md.schema.column(i).name == "_del1"), None
-            )
-            if didx is not None:
-                live = 0
-                ok = True
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(didx).statistics
-                    if st is None or st.null_count is None:
-                        ok = False
-                        break
-                    live += int(st.null_count)
-                if ok:
-                    out["live_rows"] = live
+            # live rows via the _del1 null-count trick (see
+            # _merge_stage; staged files only): _del1 is NULL exactly
+            # on live rows, so its null_count summed over row groups
+            # counts them — commit-time lineage is footer arithmetic
+            dst = _stats(md, "_del1")
+            if dst is not None and all(
+                    st is not None and st.null_count is not None
+                    for st in dst):
+                out["live_rows"] = sum(int(st.null_count) for st in dst)
         except (OSError, ImportError, AttributeError):
             pass
         return out
 
     def _list_epoch_files(self, dirname: str) -> list[dict]:
-        """Enumerate one epoch directory's data files and collect their
-        footer stats. The footer reads are KB-sized but O(epoch files)
+        """Enumerate one data directory's files (stage, rewrite,
+        compact or bootstrap) and always collect their footer stats:
+        file pruning uses the zones, ``_merge_lineage`` the staged
+        files' counts. The footer reads are KB-sized but O(epoch files)
         on the driver — at 4096 buckets/epoch a sequential loop is
         seconds of per-commit latency, so they run on a small thread
         pool (I/O-bound, GIL released inside pyarrow). At larger file
         counts Iceberg moves this into the executors (stats collected
-        by the writing task); ``SPARK_GRAFT_FILE_STATS=0`` drops the
-        collection entirely (pruning degrades to bucket-only)."""
+        by the writing task)."""
         epoch_dir = os.path.join(self.path, "data", dirname)
         out: list[dict] = []
         if not os.path.isdir(epoch_dir):
@@ -1583,7 +1583,7 @@ class MicroLakeTable:
                         "path": os.path.join("data", dirname, bdir, fn),
                         "bucket": bucket,
                     })
-        if os.environ.get("SPARK_GRAFT_FILE_STATS", "1") != "0" and out:
+        if out:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(min(16, len(out))) as pool:
@@ -2031,13 +2031,16 @@ class MicroLakeTable:
             existing = self._read_ref(name)
         except KeyError:
             pass
-        if existing is not None and existing.get("kind") == "branch":
+        if (existing is not None and existing.get("kind") == "branch"
+                and existing.get("manifest") != existing.get("base")):
             # ADVICE r5 (medium): reconcile a crash between
             # publish_branch's pointer swap and its ref removal — the
             # branch head already IS what _current serves, so the
             # publish completed; the leftover ref must not occupy the
             # name forever (nor pin history as a GC root). Delete it
-            # and fall through to a fresh branch.
+            # and fall through to a fresh branch. Only a branch that
+            # committed (head != base) can be such a leftover: a fresh
+            # branch's head equals _current too, and it is live.
             try:
                 with open(os.path.join(self.path, "_current")) as f:
                     cur = f.read().strip()

@@ -8,7 +8,12 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from tap_github_search_spark.sources.generator import write_changelog
-from tap_github_search_spark.streaming.derived import RollupMaintainer, conv_rollup
+from tap_github_search_spark.streaming import derived
+from tap_github_search_spark.streaming.derived import (
+    RollupMaintainer,
+    conv_rollup,
+    staged_root_keys,
+)
 from tap_github_search_spark.streaming.job import replay
 from tests.test_engine import _events
 
@@ -43,7 +48,7 @@ def test_bulk_epoch_uses_shuffle_join_not_broadcast(
     is 'too big', the bulk-backfill case) the probe join falls back to
     a plain shuffle join and the chain still converges to the full
     recompute."""
-    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_KEYS", "0")
+    monkeypatch.setattr(derived, "BROADCAST_KEYS", 0)
     write_changelog(spark, f"{tmp_dir}/log", 80, n_files=2, delete_pct=20)
     table, results = replay(spark, [f"{tmp_dir}/log"], f"{tmp_dir}/t",
                             n_buckets=4, n_epochs=2)
@@ -59,7 +64,7 @@ def test_bulk_epoch_uses_shuffle_join_not_broadcast(
     # broadcast join at runtime from actual stats — that is the safe,
     # size-aware decision the guard defers to; the bug was forcing the
     # hint regardless of size)
-    affected = maint.chain.affected_root_keys(results[-1].epoch)
+    affected = staged_root_keys(spark, table, results[-1].epoch, [])
 
     def hinted(df):
         plan = df._jdf.queryExecution().analyzed().toString()
@@ -72,7 +77,7 @@ def test_bulk_epoch_uses_shuffle_join_not_broadcast(
     )
     assert not hinted(probe)
     # and with a generous threshold the small set IS hinted again
-    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_KEYS", "1000000")
+    monkeypatch.setattr(derived, "BROADCAST_KEYS", 1_000_000)
     probe2 = table.snapshot_df().join(
         maybe_broadcast(affected), "conv_id"
     )

@@ -234,6 +234,34 @@ def test_null_key_events_rejected_not_poisoning(spark, tmp_dir):
     assert m["events_rejected"] == 2
 
 
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_null_op_event_rejected(spark, tmp_dir, mode):
+    """An event with a NULL op is neither an upsert nor a delete. It
+    must be rejected and counted in events_rejected, not applied: CoW's
+    rewrite used to read its NULL _deleted back as an update, MOR's
+    reader used to drop the key."""
+    schema = (
+        "seq long, op string, conv_id string, turn_idx int, role string,"
+        " text string, tool string, ts timestamp"
+    )
+    t = MicroLakeTable.create(
+        spark, f"{tmp_dir}/t",
+        spark.createDataFrame([], schema).drop("op", "seq").schema,
+        n_buckets=4,
+    )
+    t.merge(spark.createDataFrame(
+        [(1, "I", "a", 0, "user", "v1", None, _ts(10))], schema),
+        0, merge_mode=mode)
+    r = t.merge(spark.createDataFrame(
+        [(2, None, "a", 0, "user", "v2", None, _ts(20))], schema),
+        1, merge_mode=mode)
+    assert r.events_in == 1 and r.rows_applied == 0
+    snap = t.snapshot_df().collect()
+    assert [(x["conv_id"], x["text"]) for x in snap] == [("a", "v1")]
+    m = t.metrics_df().filter(F.col("commit_epoch") == 1).first()
+    assert m["events_rejected"] == 1
+
+
 def test_hot_key_extreme_duplication(spark, tmp_dir):
     """Skew torture: one (conv_id, turn_idx) receives 50k updates in a
     single batch (north_rule hot-conversation case). The WindowGroupLimit

@@ -10,11 +10,13 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from tap_github_search_spark.sources.generator import write_changelog
+from tap_github_search_spark.streaming import derived
 from tap_github_search_spark.streaming.derived import (
     EpochContext,
     RollupMaintainer,
     bucket_ids_of,
     conv_rollup,
+    daily_rollup,
     maybe_broadcast,
     staged_root_keys,
 )
@@ -82,6 +84,10 @@ def test_maintainer_epoch_probe_is_bucket_pruned(spark, tmp_dir):
     keys = staged_root_keys(spark, table, 1, [])
     ids = bucket_ids_of(keys, "conv_id", table.n_buckets)
     assert ids is not None and len(ids) == 1
+    # every bucket affected → None: a full restriction prunes nothing
+    every = spark.range(1000).select(F.col("id").cast("string")
+                                     .alias("conv_id"))
+    assert bucket_ids_of(every, "conv_id", table.n_buckets) is None
     read = _rel_input_files(table.snapshot_df(buckets=ids), table)
     all_files = {f["path"] for f in table.manifest["files"]}
     in_bucket = {f["path"] for f in table.manifest["files"]
@@ -99,18 +105,10 @@ def test_maintainer_epoch_probe_is_bucket_pruned(spark, tmp_dir):
     pd.testing.assert_frame_equal(got, expect, check_dtype=False)
 
 
-def test_bucket_prune_disabled_by_env(spark, tmp_dir, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_BUCKET_PRUNE", "0")
-    write_changelog(spark, f"{tmp_dir}/log", 20, n_files=1)
-    table, _ = replay(spark, [f"{tmp_dir}/log"], f"{tmp_dir}/t",
-                      n_buckets=8)
-    keys = table.snapshot_df().select("conv_id").distinct().limit(1)
-    assert bucket_ids_of(keys, "conv_id", 8) is None
-
-
-def test_epoch_context_matches_unshared_path(spark, tmp_dir):
-    """A chain maintained through the shared EpochContext must produce
-    exactly the state the unshared path produces."""
+def test_epoch_context_paths_match_full_recompute(spark, tmp_dir):
+    """A chain maintained through a caller's shared EpochContext and
+    one that builds its own (no ``ctx``) must both equal the full
+    recompute at every level: conv rollup and daily rollup."""
     write_changelog(spark, f"{tmp_dir}/log", 50, n_files=2,
                     delete_pct=20)
     table, results = replay(spark, [f"{tmp_dir}/log"], f"{tmp_dir}/t",
@@ -128,15 +126,18 @@ def test_epoch_context_matches_unshared_path(spark, tmp_dir):
             ctx.release()
 
     def canon(df):
-        pdf = df.drop("ts").toPandas()
+        pdf = df.toPandas()
         return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
 
-    pd.testing.assert_frame_equal(canon(a.child.snapshot_df()),
-                                  canon(b.child.snapshot_df()))
-    pd.testing.assert_frame_equal(
-        canon(a.grandchild.snapshot_df()),
-        canon(b.grandchild.snapshot_df()),
-    )
+    want_conv = canon(conv_rollup(table.snapshot_df()))
+    want_daily = canon(daily_rollup(conv_rollup(table.snapshot_df())))
+    for m in (a, b):
+        pd.testing.assert_frame_equal(
+            canon(m.child.snapshot_df().drop("ts")), want_conv,
+            check_dtype=False)
+        pd.testing.assert_frame_equal(
+            canon(m.grandchild.snapshot_df().drop("ts")), want_daily,
+            check_dtype=False)
 
 
 def test_dim_wide_churn_falls_back_to_shuffle(spark, tmp_dir,
@@ -145,7 +146,7 @@ def test_dim_wide_churn_falls_back_to_shuffle(spark, tmp_dir,
     changed-key set 'too big'), a dim-wide rewrite must flow through
     the shuffle fallback in BOTH dim-churn maintainers and still
     converge to the ground-truth twins."""
-    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_KEYS", "0")
+    monkeypatch.setattr(derived, "BROADCAST_KEYS", 0)
     # join view: fact epoch 0 + full dim churn
     write_changelog(spark, f"{tmp_dir}/log", 30, n_files=1)
     fact, _ = replay(spark, [f"{tmp_dir}/log"], f"{tmp_dir}/fact",

@@ -124,7 +124,7 @@ def test_optimize_dry_run_and_vacuum(spark, tmp_dir):
 
 def test_parquet_native_bloom_filter_written(spark, tmp_dir, monkeypatch):
     """_write attaches a parquet-native bloom on the primary key: the
-    same rows written with SPARK_GRAFT_BLOOM_NDV=0 vs default produce
+    same rows written with MicroLakeTable.BLOOM_NDV=0 vs on produce
     strictly smaller files — the only difference is the serialized
     bloom. (Neither pyarrow nor duckdb in this container expose
     bloom_filter_offset, so presence is proven by the byte delta.)"""
@@ -138,9 +138,9 @@ def test_parquet_native_bloom_filter_written(spark, tmp_dir, monkeypatch):
             for f in t.manifest["files"]
         )
 
-    monkeypatch.setenv("SPARK_GRAFT_BLOOM_NDV", "0")
+    monkeypatch.setattr(MicroLakeTable, "BLOOM_NDV", 0)
     replay(spark, [f"{tmp_dir}/log0"], f"{tmp_dir}/t_off", n_buckets=2)
-    monkeypatch.setenv("SPARK_GRAFT_BLOOM_NDV", "50000")
+    monkeypatch.setattr(MicroLakeTable, "BLOOM_NDV", 50_000)
     replay(spark, [f"{tmp_dir}/log0"], f"{tmp_dir}/t_on", n_buckets=2)
 
     off, on = table_bytes(f"{tmp_dir}/t_off"), table_bytes(f"{tmp_dir}/t_on")

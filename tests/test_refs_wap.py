@@ -355,3 +355,20 @@ def test_publish_crash_between_swap_and_ref_removal_reconciles(
     assert t2.publish_branch("wap-2") > head_v
     assert _convs(MicroLakeTable.load(spark, f"{tmp_dir}/t")
                   .snapshot_df()) == {"c1", "c2", "c3", "c4"}
+
+
+def test_branch_begin_refuses_live_branch(spark, tmp_dir):
+    """A freshly opened branch's head equals _current, exactly like a
+    published-but-not-removed leftover. A second branch_begin without
+    reset must refuse, not delete the live branch and hand out a second
+    handle to the same name."""
+    t = _mk(spark, tmp_dir)
+    br = t.branch_begin("wap")
+    with pytest.raises(ConcurrentCommitError, match="already exists"):
+        t.branch_begin("wap")
+    # the first handle's branch survived and still publishes
+    br.merge(_events(spark, [(10, "I", "c3", 0, 20)]), epoch=1)
+    t.publish_branch("wap")
+    assert _convs(MicroLakeTable.load(spark, t.path).snapshot_df()) == {
+        "c1", "c2", "c3"
+    }
