@@ -214,22 +214,19 @@ def _parser() -> argparse.ArgumentParser:
 
     mt = sub.add_parser(
         "maintain",
-        help="auto-maintenance: compact/rebucket/vacuum per policy",
+        help="auto-maintenance: one bounded policy round (migrate the "
+             "bucket spec, compact, vacuum)",
     )
     mt.add_argument("--table", required=True, help="lake table path")
     mt.add_argument("--target-bucket-mb", type=int, default=256,
-                    help="rebucket when avg bucket exceeds this")
+                    help="start a bucket-spec migration when the avg "
+                         "bucket exceeds this")
     mt.add_argument("--max-generations", type=int, default=4,
                     help="compact buckets holding more file generations")
     mt.add_argument("--keep-versions", type=int, default=8,
                     help="snapshots to retain (vacuum beyond)")
     mt.add_argument("--grace-seconds", type=float, default=3600.0,
                     help="never delete files younger than this")
-    mt.add_argument("--progressive", action="store_true",
-                    help="growth trigger starts an Iceberg-style "
-                         "progressive spec migration (metadata-only "
-                         "switch + bounded migrate rounds) instead of "
-                         "one full-table rewrite")
     mt.add_argument("--dry-run", action="store_true",
                     help="report decisions without acting")
 
@@ -579,8 +576,6 @@ def main(argv: list[str] | None = None) -> int:
             keep_versions=args.keep_versions,
             grace_seconds=args.grace_seconds,
             dry_run=args.dry_run,
-            allow_rebucket=not args.progressive,
-            progressive_rebucket=args.progressive,
         )
         print(json.dumps(report))
         return 0

@@ -37,8 +37,10 @@ UDF (``arrow_udf``, Spark 4) keeps batches as ``pyarrow`` arrays:
 The quick-check class is the standard NFC quick-check idea (UAX #15
 §9): a string is guaranteed NFC-invariant when none of its codepoints
 is (a) a combining mark (canonical combining class > 0 — may reorder
-or compose), (b) a Hangul jamo (composes with ccc=0), or (c) a
-singleton whose NFC differs (e.g. U+2126 OHM SIGN). The table is
+or compose), (b) the second element of a canonical pair (NFC_QC=Maybe:
+composes with the character before it even at ccc=0, e.g. U+09BE),
+(c) a Hangul jamo (composes with ccc=0), or (d) a singleton whose NFC
+differs (e.g. U+2126 OHM SIGN). The table is
 generated from Python's own ``unicodedata`` by
 ``_nfc_suspect_ranges()`` and frozen here as a literal so Python
 workers don't re-derive it at import; ``tests`` re-generate and
@@ -61,14 +63,22 @@ def _nfc_suspect_ranges() -> list[tuple[int, int]]:
     """Regenerate the NFC quick-check codepoint ranges from the running
     interpreter's ``unicodedata`` (test/verification path; the UDF uses
     the frozen ``_NFC_SUSPECT_TABLE`` literal below)."""
+    codepoints = [c for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
+    # second elements of canonical pairs (NFC_QC=Maybe): they compose
+    # with the character BEFORE them, e.g. U+09C7 + U+09BE -> U+09CB,
+    # yet many have ccc=0 and are NFC on their own
+    composers = set()
+    for c in codepoints:
+        d = unicodedata.decomposition(chr(c)).split()
+        if len(d) == 2 and not d[0].startswith("<"):
+            composers.add(int(d[1], 16))
     ranges: list[list[int]] = []
     cur: list[int] | None = None
-    for c in range(0x110000):
-        if 0xD800 <= c <= 0xDFFF:
-            continue
+    for c in codepoints:
         ch = chr(c)
         bad = (
             unicodedata.combining(ch) != 0
+            or c in composers
             or 0x1100 <= c <= 0x11FF
             or 0xA960 <= c <= 0xA97F
             or 0xD7B0 <= c <= 0xD7FF
@@ -92,13 +102,14 @@ _NFC_SUSPECT_TABLE = (
     "300-34e,350-36f,374,37e,387,483-487,591-5bd,5bf,5c1-5c2,5c4-5c5,5c7,"
     "610-61a,64b-65f,670,6d6-6dc,6df-6e4,6e7-6e8,6ea-6ed,711,730-74a,"
     "7eb-7f3,7fd,816-819,81b-823,825-827,829-82d,859-85b,898-89f,8ca-8e1,"
-    "8e3-8ff,93c,94d,951-954,958-95f,9bc,9cd,9dc-9dd,9df,9fe,a33,a36,a3c,"
-    "a4d,a59-a5b,a5e,abc,acd,b3c,b4d,b5c-b5d,bcd,c3c,c4d,c55-c56,cbc,ccd,"
-    "d3b-d3c,d4d,dca,e38-e3a,e48-e4b,eb8-eba,ec8-ecb,f18-f19,f35,f37,f39,"
-    "f43,f4d,f52,f57,f5c,f69,f71-f76,f78,f7a-f7d,f80-f84,f86-f87,f93,f9d,"
-    "fa2,fa7,fac,fb9,fc6,1037,1039-103a,108d,1100-11ff,135d-135f,"
+    "8e3-8ff,93c,94d,951-954,958-95f,9bc,9be,9cd,9d7,9dc-9dd,9df,9fe,a33,"
+    "a36,a3c,a4d,a59-a5b,a5e,abc,acd,b3c,b3e,b4d,b56-b57,b5c-b5d,bbe,bcd,"
+    "bd7,c3c,c4d,c55-c56,cbc,cc2,ccd,cd5-cd6,d3b-d3c,d3e,d4d,d57,dca,dcf,"
+    "ddf,e38-e3a,e48-e4b,eb8-eba,ec8-ecb,f18-f19,f35,f37,f39,f43,f4d,f52,"
+    "f57,f5c,f69,f71-f76,f78,f7a-f7d,f80-f84,f86-f87,f93,f9d,fa2,fa7,fac,"
+    "fb5,fb7,fb9,fc6,102e,1037,1039-103a,108d,1100-11ff,135d-135f,"
     "1714-1715,1734,17d2,17dd,18a9,1939-193b,1a17-1a18,1a60,1a75-1a7c,"
-    "1a7f,1ab0-1abd,1abf-1ace,1b34,1b44,1b6b-1b73,1baa-1bab,1be6,"
+    "1a7f,1ab0-1abd,1abf-1ace,1b34-1b35,1b44,1b6b-1b73,1baa-1bab,1be6,"
     "1bf2-1bf3,1c37,1cd0-1cd2,1cd4-1ce0,1ce2-1ce8,1ced,1cf4,1cf8-1cf9,"
     "1dc0-1dff,1f71,1f73,1f75,1f77,1f79,1f7b,1f7d,1fbb,1fbe,1fc9,1fcb,"
     "1fd3,1fdb,1fe3,1feb,1fee-1fef,1ff9,1ffb,1ffd,2000-2001,20d0-20dc,"
@@ -110,10 +121,11 @@ _NFC_SUSPECT_TABLE = (
     "fb1d-fb1f,fb2a-fb36,fb38-fb3c,fb3e,fb40-fb41,fb43-fb44,fb46-fb4e,"
     "fe20-fe2f,101fd,102e0,10376-1037a,10a0d,10a0f,10a38-10a3a,10a3f,"
     "10ae5-10ae6,10d24-10d27,10eab-10eac,10f46-10f50,10f82-10f85,11046,"
-    "11070,1107f,110b9-110ba,11100-11102,11133-11134,11173,111c0,111ca,"
-    "11235-11236,112e9-112ea,1133b-1133c,1134d,11366-1136c,11370-11374,"
-    "11442,11446,1145e,114c2-114c3,115bf-115c0,1163f,116b6-116b7,1172b,"
-    "11839-1183a,1193d-1193e,11943,119e0,11a34,11a47,11a99,11c3f,11d42,"
+    "11070,1107f,110b9-110ba,11100-11102,11127,11133-11134,11173,111c0,"
+    "111ca,11235-11236,112e9-112ea,1133b-1133c,1133e,1134d,11357,"
+    "11366-1136c,11370-11374,11442,11446,1145e,114b0,114ba,114bd,"
+    "114c2-114c3,115af,115bf-115c0,1163f,116b6-116b7,1172b,11839-1183a,"
+    "11930,1193d-1193e,11943,119e0,11a34,11a47,11a99,11c3f,11d42,"
     "11d44-11d45,11d97,16af0-16af4,16b30-16b36,16ff0-16ff1,1bc9e,"
     "1d15e-1d169,1d16d-1d172,1d17b-1d182,1d185-1d18b,1d1aa-1d1ad,"
     "1d1bb-1d1c0,1d242-1d244,1e000-1e006,1e008-1e018,1e01b-1e021,"

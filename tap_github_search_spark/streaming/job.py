@@ -460,17 +460,12 @@ def stream(
             table.compact()
         if (optimize_every and not res.skipped
                 and (batch_id + 1) % optimize_every == 0):
-            # the BOUNDED policy loop riding the stream (compaction on
-            # pileup, snapshot expiry) — each action is its own
+            # the BOUNDED policy loop riding the stream (spec migration
+            # in compact_batch-sized rounds, compaction on pileup,
+            # snapshot expiry) — each action is its own
             # snapshot-isolated commit, so a crash mid-maintenance
-            # replays as no-ops. allow_rebucket=False: a full-table
-            # rewrite inside foreachBatch would stall ingest for the
-            # rewrite's duration at scale; the policy only REPORTS the
-            # rebucket decision here and the out-of-band `maintain`
-            # CLI executes it (VERDICT r3 #3)
-            opts = {k: v for k, v in (optimize_opts or {}).items()
-                    if k != "allow_rebucket"}
-            table.optimize(allow_rebucket=False, **opts)
+            # replays as no-ops
+            table.optimize(**(optimize_opts or {}))
         # Derived levels ride the same epoch, fenced independently.
         # Crucially they must ALSO run when the parent skipped (crash
         # landed between the parent commit and a derived commit →

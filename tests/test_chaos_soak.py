@@ -111,7 +111,7 @@ def test_chaos_soak_composed_topology(spark, tmp_dir, monkeypatch):
                     t.migrate_step(max_buckets=2)  # bounded rounds
                 else:
                     t.optimize(max_generations=2, compact_batch=4,
-                               keep_versions=200, allow_rebucket=False)
+                               keep_versions=200)
                 if races["runs"] % 3 == 2:
                     # dim churn racing the stream: a tier bump the join
                     # view must pick up via change_feed (the dim merge

@@ -1,11 +1,15 @@
-"""Guard on the engine's environment surface: the package reads only
-the deployment settings below. A new tuning option belongs in a
-constant (tests monkeypatch it), not in another ``SPARK_GRAFT_*``
-variable."""
+"""Guard on the engine's option surface: the package reads only the
+deployment settings below. A new tuning option belongs in a constant
+(tests monkeypatch it), not in another ``SPARK_GRAFT_*`` variable. The
+maintenance policy's keyword set and the ``maintain`` CLI flags are
+pinned too — the policy has one path, with no switch between
+alternatives."""
 
 from __future__ import annotations
 
+import argparse
 import ast
+import inspect
 import pathlib
 
 import tap_github_search_spark
@@ -58,3 +62,31 @@ def test_engine_reads_only_allowlisted_graft_env_vars():
     extra = set(found) - ALLOWED
     assert not extra, {k: found[k] for k in sorted(extra)}
     assert set(found) == ALLOWED
+
+
+OPTIMIZE_KWARGS = {
+    "target_bucket_bytes", "max_generations", "compact_batch",
+    "keep_versions", "grace_seconds", "metadata_keep_epochs", "dry_run",
+}
+
+MAINTAIN_FLAGS = {
+    "--table", "--target-bucket-mb", "--max-generations",
+    "--keep-versions", "--grace-seconds", "--dry-run", "--cores",
+}
+
+
+def test_optimize_keyword_set_is_pinned():
+    from tap_github_search_spark.table.microlake import MicroLakeTable
+
+    params = inspect.signature(MicroLakeTable.optimize).parameters
+    assert set(params) - {"self"} == OPTIMIZE_KWARGS
+
+
+def test_maintain_flag_set_is_pinned():
+    from tap_github_search_spark.cli import _parser
+
+    sub = next(a for a in _parser()._actions
+               if isinstance(a, argparse._SubParsersAction))
+    flags = {opt for a in sub.choices["maintain"]._actions
+             for opt in a.option_strings} - {"-h", "--help"}
+    assert flags == MAINTAIN_FLAGS

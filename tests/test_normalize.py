@@ -107,3 +107,32 @@ def test_plan_has_no_batch_eval_python(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" in plan
+
+
+def _canonical_pairs() -> list[str]:
+    """Every two-codepoint canonical decomposition, as its decomposed
+    string (the input NFC must compose back)."""
+    out = []
+    for c in range(0x110000):
+        if 0xD800 <= c <= 0xDFFF:
+            continue
+        d = unicodedata.decomposition(chr(c)).split()
+        if len(d) == 2 and not d[0].startswith("<"):
+            out.append(chr(int(d[0], 16)) + chr(int(d[1], 16)))
+    return out
+
+
+def test_canonical_pairs_and_hangul_match_unicodedata():
+    """Checked against unicodedata directly, not the table generator:
+    every canonical pair (including NFC_QC=Maybe second elements with
+    ccc=0, e.g. U+09C7 U+09BE -> U+09CB) and Hangul LV + T must come
+    out exactly as NFC."""
+    cases = _canonical_pairs()
+    assert len(cases) > 1000
+    cases += ["অ" + p for p in cases[:50]]  # after a base letter
+    cases += [chr(lv) + chr(t) for lv in range(0xAC00, 0xD7A4, 28)
+              for t in range(0x11A8, 0x11C3)]
+    got = _normalize_arrow(pa.array(cases, pa.string())).to_pylist()
+    want = [unicodedata.normalize("NFC", x) for x in cases]
+    bad = [(x, g) for x, g, w in zip(cases, got, want) if g != w]
+    assert not bad, bad[:5]

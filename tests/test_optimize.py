@@ -39,65 +39,92 @@ def test_optimize_compacts_mor_pileup(spark, tmp_dir):
     assert rep2["actions"] == []
 
 
-def test_optimize_rebuckets_on_growth_and_subsumes_compact(spark, tmp_dir):
+def test_optimize_starts_migration_on_growth_and_compacts(spark, tmp_dir):
+    """Growth STARTS a progressive spec migration (metadata-only, so
+    the same policy is safe in-stream); compaction on pileup still runs
+    in the same round, and follow-up rounds drain the migration to a
+    plain table."""
     table = _seed(spark, tmp_dir)
     table.merge(_events(spark, [(900, "U", "c1", 0, 900)]), epoch=1,
                 merge_mode="mor")
-    # tiny target forces growth action; pileup exists too — rebucket wins
+    before = table.snapshot_df().orderBy("conv_id", "turn_idx").collect()
+    # tiny target forces the growth action; pileup exists too
     rep = table.optimize(target_bucket_bytes=1024, max_generations=0,
                          keep_versions=100)
-    assert rep["rebucketed_to"] is not None
-    assert rep["rebucketed_to"] > 2 and rep["compacted_buckets"] == 0
+    assert any(a.startswith("rebucket_start") for a in rep["actions"])
+    assert rep["rebucketed_to"] > 2
+    assert rep["compacted_buckets"] > 0  # compaction is not subsumed
     t2 = MicroLakeTable.load(spark, table.path)
     assert t2.n_buckets == rep["rebucketed_to"]
     assert (t2.n_buckets & (t2.n_buckets - 1)) == 0  # power of two
-    assert not t2.manifest.get("read_dedup")
-    assert t2.snapshot_df().filter("conv_id = 'c1' AND turn_idx = 0") \
-        .first()["text"] is not None
+    assert t2.manifest["migration_pending"]
 
-
-def test_optimize_defers_rebucket_when_disallowed(spark, tmp_dir):
-    """VERDICT r3 #3: with allow_rebucket=False (the in-stream policy
-    contract) a growth trigger only REPORTS the rebucket decision; the
-    bucket spec is untouched and bounded compaction still runs so MOR
-    pileup doesn't accumulate behind the deferred rewrite."""
-    table = _seed(spark, tmp_dir)
-    table.merge(_events(spark, [(900, "U", "c1", 0, 900)]), epoch=1,
-                merge_mode="mor")
-    rep = table.optimize(target_bucket_bytes=1024, max_generations=0,
-                         keep_versions=100, allow_rebucket=False)
-    assert rep["rebucketed_to"] is None
-    assert rep["rebucket_wanted"] > 2
-    assert any("deferred to out-of-band maintain" in a
-               for a in rep["actions"])
+    for _ in range(5):
+        t2.optimize(target_bucket_bytes=1024, max_generations=0,
+                    keep_versions=100)
+        t2 = MicroLakeTable.load(spark, table.path)
+        if not t2.manifest.get("migration_pending"):
+            break
+    assert not t2.manifest.get("migration_pending")
+    t2.optimize(target_bucket_bytes=1024, max_generations=0,
+                keep_versions=100)
     t2 = MicroLakeTable.load(spark, table.path)
-    assert t2.n_buckets == 2  # spec untouched
-    # compaction was NOT subsumed: the pileup still got resolved
-    assert rep["compacted_buckets"] > 0
     assert not t2.manifest.get("read_dedup")
-    # the out-of-band maintain path (allow_rebucket default) executes it
-    rep2 = t2.optimize(target_bucket_bytes=1024, max_generations=0,
-                       keep_versions=100)
-    assert rep2["rebucketed_to"] is not None
-    assert MicroLakeTable.load(spark, table.path).n_buckets > 2
+    assert t2.n_buckets == rep["rebucketed_to"]  # no second growth step
+    after = t2.snapshot_df().orderBy("conv_id", "turn_idx").collect()
+    assert after == before
 
 
 def test_stream_optimize_never_rebuckets_inline(spark, tmp_dir):
-    """The streaming loop's optimize_every must never fire a full-table
-    rewrite mid-stream, even when the growth trigger wants one."""
+    """The streaming loop's optimize_every never rewrites the whole
+    table in one go: a growth trigger (2 -> 4 buckets here) starts a
+    metadata-only migration, and every in-stream ``migrate`` commit
+    rewrites at most ``compact_batch`` old-spec bucket groups. The
+    final table equals the full-replay oracle."""
+    import json
+
     from tap_github_search_spark.sources.generator import write_changelog
     from tap_github_search_spark.streaming.job import stream
+    from tests.test_engine import _assert_table_equals_oracle
 
-    write_changelog(spark, f"{tmp_dir}/log", 60, n_files=3)
+    write_changelog(spark, f"{tmp_dir}/log", 60, n_files=6)
+    ref, _ = replay(spark, [f"{tmp_dir}/log"], f"{tmp_dir}/ref",
+                    n_buckets=2)
+    # a full table spread over 3 buckets' worth of target: 2 buckets
+    # overflow it, 4 hold it
+    target = ref.stats()["total_bytes"] // 3
+    compact_batch = 1
     stream(spark, [f"{tmp_dir}/log"], f"{tmp_dir}/t", f"{tmp_dir}/ckpt",
            n_buckets=2, max_files_per_trigger=1, optimize_every=1,
-           optimize_opts={"target_bucket_bytes": 1, "keep_versions": 1000})
+           optimize_opts={"target_bucket_bytes": target,
+                          "compact_batch": compact_batch,
+                          "keep_versions": 1000})
     t = MicroLakeTable.load(spark, f"{tmp_dir}/t")
-    assert t.n_buckets == 2  # growth trigger reported, never executed
-    # and the decision IS surfaced for the out-of-band loop
-    rep = t.optimize(target_bucket_bytes=1, keep_versions=1000,
-                     allow_rebucket=False, dry_run=True)
-    assert rep["rebucket_wanted"] > 2
+
+    mdir = os.path.join(t.path, "_manifests")
+    mans = []
+    for name in sorted(os.listdir(mdir)):
+        if name.startswith("manifest-"):
+            with open(os.path.join(mdir, name)) as f:
+                mans.append(json.load(f))
+    ops = [m.get("commit_op", [None])[0] for m in mans]
+    assert ops.count("rebucket-start") == 1
+    assert "rebucket" not in ops  # no one-shot rewrite in-stream
+    migrated = 0
+    for prev, m in zip(mans, mans[1:]):
+        if m.get("commit_op") != ["migrate"]:
+            continue
+
+        def groups(man):
+            return {(f["spec_n"], f["bucket"]) for f in man["files"]
+                    if f.get("spec_n", man["n_buckets"]) != man["n_buckets"]}
+
+        gone = groups(prev) - groups(m)
+        assert 0 < len(gone) <= compact_batch
+        migrated += len(gone)
+    assert migrated >= 1
+    assert t.n_buckets == 4
+    _assert_table_equals_oracle(t, f"'{tmp_dir}/log/*.parquet'")
 
 
 def test_optimize_dry_run_and_vacuum(spark, tmp_dir):

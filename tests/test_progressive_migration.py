@@ -1,9 +1,10 @@
-"""Progressive partition-spec migration (VERDICT r3 missing #3): the
-Iceberg-style alternative to the full-table ``rebucket`` rewrite — a
-metadata-only spec switch (``rebucket_start``), MOR semantics while
-old-spec files remain, bounded ``migrate_step`` rounds, spec-aware
-point reads throughout, and the ``optimize`` policy driving the whole
-lifecycle in bounded (stream-safe) steps."""
+"""Progressive partition-spec migration (VERDICT r3 missing #3), the
+one way a table's bucket spec changes: a metadata-only spec switch
+(``rebucket_start``), MOR semantics while old-spec files remain,
+bounded LWW-resolving ``migrate_step`` rounds, spec-aware point reads
+throughout, ``rebucket`` as the one-call composition, and the
+``optimize`` policy driving the whole lifecycle in bounded
+(stream-safe) steps."""
 
 from __future__ import annotations
 
@@ -112,23 +113,21 @@ def test_progressive_migration_end_to_end(spark, tmp_dir):
 
 def test_optimize_drives_progressive_migration(spark, tmp_dir):
     """The policy loop runs the whole lifecycle in bounded steps: the
-    growth trigger STARTS the migration (metadata-only, stream-safe
-    even with allow_rebucket=False), subsequent runs execute bounded
-    migrate rounds, and the fixed point is a fully-migrated table."""
+    growth trigger STARTS the migration (metadata-only, stream-safe),
+    subsequent runs execute bounded migrate rounds, and the fixed point
+    is a fully-migrated table."""
     table = _seed(spark, tmp_dir)
     before = _snap(table)
 
-    rep = table.optimize(target_bucket_bytes=1024, allow_rebucket=False,
-                         progressive_rebucket=True, keep_versions=500)
+    rep = table.optimize(target_bucket_bytes=1024, keep_versions=500)
     assert any("rebucket_start" in a for a in rep["actions"])
     t = MicroLakeTable.load(spark, table.path)
     assert t.manifest["migration_pending"]
-    assert t.n_buckets == rep["rebucket_wanted"] > 2
+    assert t.n_buckets == rep["rebucketed_to"] > 2
 
     seen_remaining = []
     for _ in range(10):
-        rep = t.optimize(target_bucket_bytes=1024, allow_rebucket=False,
-                         progressive_rebucket=True, compact_batch=1,
+        rep = t.optimize(target_bucket_bytes=1024, compact_batch=1,
                          keep_versions=500)
         t = MicroLakeTable.load(spark, table.path)
         if "migration_remaining" in rep:
@@ -230,3 +229,77 @@ def test_change_feed_bookmark_mid_migration_no_phantom_deletes(
     # exactly the post-bookmark update — and zero deletes of any kind
     assert {(r["conv_id"], r["_change_type"]) for r in feed} == \
         {("k009", "update")}
+
+
+def _two_generations(spark, tmp_dir, n=40):
+    """A MOR table where every key has two generations: ``v1`` rows in
+    the first file generation, ``v2`` rows superseding all of them in a
+    second one."""
+    import os
+
+    v1 = [(i, "I", f"k{i:03d}", 0, 10 + i, f"v1-{i}") for i in range(n)]
+    _events(spark, v1).write.mode("overwrite").parquet(f"{tmp_dir}/log0")
+    table, _ = replay(spark, [f"{tmp_dir}/log0"], f"{tmp_dir}/t",
+                      n_buckets=2, merge_mode="mor")
+    v2 = [(100 + i, "U", f"k{i:03d}", 0, 100 + i, f"v2-{i}")
+          for i in range(n)]
+    table.merge(_events(spark, v2), epoch=table.last_committed_epoch + 1,
+                merge_mode="mor")
+    t = MicroLakeTable.load(spark, table.path)
+    assert t.manifest["read_dedup"] and t.stats()["max_generations"] == 2
+    dirs = set(os.listdir(os.path.join(t.path, "data")))
+    return t, dirs
+
+
+def _assert_resolved(t, before):
+    assert not t.manifest.get("read_dedup")
+    assert not t.manifest.get("migration_pending")
+    assert t.stats()["old_spec_files"] == 0
+    got = _snap(t)
+    pd.testing.assert_frame_equal(got, before, check_dtype=False)
+    assert not got["text"].str.startswith("v1").any()  # no superseded row
+    assert t.stats()["total_rows"] == len(before)  # one row per key
+
+
+def test_migrate_step_resolves_mor_generations(spark, tmp_dir):
+    """Regression: migrate_step used to be a pure repartition, so a
+    migrated file could hold every generation of a key; the following
+    compact() then saw one file per bucket, cleared ``read_dedup`` and
+    superseded ``v1`` rows became visible."""
+    t, _ = _two_generations(spark, tmp_dir)
+    before = _snap(t)
+    assert len(before) == 40
+
+    t.rebucket_start(8)
+    t = MicroLakeTable.load(spark, t.path)
+    while t.migrate_step(max_buckets=1):
+        t = MicroLakeTable.load(spark, t.path)
+    t = MicroLakeTable.load(spark, t.path)
+    t.compact()
+    _assert_resolved(MicroLakeTable.load(spark, t.path), before)
+
+
+def test_rebucket_resolves_mor_generations_in_one_rewrite(spark, tmp_dir):
+    """``rebucket`` = rebucket_start + one migrate_step over every
+    group + compact: one new data directory (the same I/O as a
+    full-table rewrite), ``read_dedup`` cleared, snapshot unchanged."""
+    import os
+
+    t, dirs = _two_generations(spark, tmp_dir)
+    before = _snap(t)
+    v = t.manifest["version"]
+
+    n_files = t.rebucket(8)
+    fresh = MicroLakeTable.load(spark, t.path)
+    assert fresh.n_buckets == 8
+    assert n_files == len(fresh.manifest["files"]) > 2
+    new_dirs = set(os.listdir(os.path.join(t.path, "data"))) - dirs
+    assert len(new_dirs) == 1, new_dirs
+    assert fresh.manifest["last_rebucket_version"] == v + 1
+    # the one spec-evolution path, composed: start, one migrate round,
+    # then compact() has only the flag to clear
+    ops = [MicroLakeTable.load(spark, t.path, v + i).manifest["commit_op"]
+           for i in (1, 2, 3)]
+    assert ops == [["rebucket-start", 8], ["migrate"], ["compact-clear"]]
+    assert fresh.manifest["version"] == v + 3
+    _assert_resolved(fresh, before)
