@@ -337,6 +337,34 @@ def count_and_buckets(keys_df: DataFrame, key: str, n_buckets: int
     return n, (None if len(ids) >= n_buckets else ids)
 
 
+def epoch_events(upserts: DataFrame, gone: DataFrame, epoch: int,
+                 fields: list[T.StructField], keys: list[str]
+                 ) -> DataFrame:
+    """The synthetic WAL batch a derived writer merges for one epoch:
+    ``upserts`` (every ``fields`` column; ``ts`` is set here) as
+    ``op='U'``, unioned with the ``gone`` keys as ``op='D'`` with every
+    other payload column NULL. ``seq`` is the epoch and ``ts`` the
+    epoch time — monotone, so a newer epoch always wins LWW."""
+    epoch_ts = F.timestamp_seconds(F.lit(epoch))
+    return upserts.withColumn("ts", epoch_ts).select(
+        F.lit("U").alias("op"),
+        F.lit(epoch).cast("long").alias("seq"),
+        *[f.name for f in fields],
+    ).unionByName(
+        gone.select(
+            F.lit("D").alias("op"),
+            F.lit(epoch).cast("long").alias("seq"),
+            *keys,
+            *[
+                F.lit(None).cast(f.dataType).alias(f.name)
+                for f in fields
+                if f.name not in (*keys, "ts")
+            ],
+            epoch_ts.alias("ts"),
+        ),
+    )
+
+
 class EpochContext:
     """Per-epoch frames shared across every maintainer of one main
     table (r06, VERDICT r5 #2): the staged root-key frame, its bucket
@@ -577,25 +605,8 @@ class DerivedChain:
         rollups = spec.transform(live)
         # keys that lost every live member → delete the derived row
         gone = affected.join(rollups.select(spec.key), spec.key, "left_anti")
-        epoch_ts = F.timestamp_seconds(F.lit(epoch))
-        payload = [f.name for f in spec.schema.fields]
-        events = rollups.withColumn("ts", epoch_ts).select(
-            F.lit("U").alias("op"),
-            F.lit(epoch).cast("long").alias("seq"),
-            *payload,
-        ).unionByName(
-            gone.select(
-                F.lit("D").alias("op"),
-                F.lit(epoch).cast("long").alias("seq"),
-                spec.key,
-                *[
-                    F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in spec.schema.fields
-                    if f.name not in (spec.key, "ts")
-                ],
-                epoch_ts.alias("ts"),
-            ),
-        )
+        events = epoch_events(rollups, gone, epoch, spec.schema.fields,
+                              [spec.key])
         return table.merge(events, epoch=epoch)
 
     @property

@@ -47,6 +47,7 @@ from .derived import (
     EpochContext,
     bucket_ids_of,
     count_and_buckets,
+    epoch_events,
     maybe_broadcast,
     staged_root_keys,
 )
@@ -185,13 +186,9 @@ class JoinViewMaintainer:
         # creation-time schema: a column added/widened on either input
         # mid-stream flows into the view through merge's own schema
         # evolution (the same promotion rules as any table)
-        payload_fields = [
-            f for f in join_view_schema(
-                self.fact.schema, self.dim.schema, self.join_col
-            ).fields
-        ]
-        payload = [f.name for f in payload_fields]
-        epoch_ts = F.timestamp_seconds(F.lit(epoch))
+        payload_fields = join_view_schema(
+            self.fact.schema, self.dim.schema, self.join_col
+        ).fields
         # view keys under affected roots that lost their fact row →
         # delete rows (fact deletes propagate); the view shares the
         # fact's bucketing key, so the same bucket prune applies when
@@ -204,23 +201,7 @@ class JoinViewMaintainer:
             .join(maybe_broadcast(aff, n_aff), root)
             .join(joined.select(*keys), keys, "left_anti")
         )
-        events = joined.withColumn("ts", epoch_ts).select(
-            F.lit("U").alias("op"),
-            F.lit(epoch).cast("long").alias("seq"),
-            *payload,
-        ).unionByName(
-            gone.select(
-                F.lit("D").alias("op"),
-                F.lit(epoch).cast("long").alias("seq"),
-                *keys,
-                *[
-                    F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in payload_fields
-                    if f.name not in (*keys, "ts")
-                ],
-                epoch_ts.alias("ts"),
-            ),
-        )
+        events = epoch_events(joined, gone, epoch, payload_fields, keys)
         try:
             return self.view.merge(
                 events, epoch=epoch,

@@ -25,9 +25,12 @@ implement 1:1 on a real cluster (SURVEY.md §7.2 step 3):
    read with the evolved schema and missing columns surface as NULL
    (Iceberg's read-time projection semantics).
  - **Deletes as tombstones**: a winning ``op='D'`` keeps a tombstone row
-   (``_deleted=true``) so late events older than the delete cannot
-   resurrect the key; readers filter tombstones. (Equivalent to Iceberg
-   equality deletes + eventual compaction.)
+   so late events older than the delete cannot resurrect the key;
+   readers filter tombstones. (Equivalent to Iceberg equality deletes
+   + eventual compaction.) Every data file stores ``_deleted`` as TRUE
+   on tombstones and NULL on live rows (``_tombstone``), so a footer's
+   null count is the file's live row count; ``_read_files`` reads NULL
+   back as FALSE (files written with FALSE on live rows read the same).
 
 Reference analogs: Singer's at-least-once + PK-idempotent target
 (/root/reference/tap_github_search/search_count_streams.py:42) becomes
@@ -44,14 +47,22 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.dedup import lww_winners_salted, lww_winners_window
 from ..schema import LWW_ORDER, MERGE_KEYS
 
+#: engine columns that never join the logical schema; ``_del1`` is no
+#: longer written but older data files still carry it physically
 META_COLS = ("_seq", "_deleted", "_bucket", "_del1")
+
+
+def _tombstone(is_delete: Column) -> Column:
+    """The stored delete marker: ``_deleted`` TRUE on a tombstone,
+    NULL on a live row — the one encoding every data-file writer uses."""
+    return F.when(is_delete, F.lit(True)).alias("_deleted")
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -201,7 +212,7 @@ class MicroLakeTable:
             *[F.col(f.name).cast(f.dataType).alias(f.name)
               for f in schema.fields],
             F.lit(int(as_of_seq)).cast("long").alias("_seq"),
-            F.lit(False).alias("_deleted"),
+            _tombstone(F.lit(False)),
         ).withColumn("_bucket", table._bucket_expr(keys[0]))
         store = table._cluster(store)  # one writer task per bucket
         dirname = f"bootstrap-{uuid.uuid4().hex[:8]}"
@@ -296,7 +307,8 @@ class MicroLakeTable:
     ) -> DataFrame:
         """Read data files under ``schema`` (default: current table
         schema); columns added after a file was written surface as NULL
-        (schema-evolution read).
+        (schema-evolution read). ``_deleted`` comes back as a non-null
+        boolean: the stored NULL of a live row reads as FALSE.
 
         The schema is passed to the reader EXPLICITLY — the manifest is
         authoritative, evolution is add-nullable-column-only, and the
@@ -323,8 +335,9 @@ class MicroLakeTable:
         return self.spark.read.schema(phys_schema).parquet(*paths).select(
             *[
                 F.col(mapping.get(f.name, f.name)).alias(f.name)
-                for f in meta_schema.fields
-            ]
+                for f in meta_schema.fields[:-1]
+            ],
+            F.coalesce(F.col("_deleted"), F.lit(False)).alias("_deleted"),
         )
 
     def raw_df(self) -> DataFrame:
@@ -333,17 +346,12 @@ class MicroLakeTable:
         return self._read_files(self.manifest["files"])
 
     def _read_lww(self, df: DataFrame) -> DataFrame:
-        """Read-side LWW across MOR file generations: newest (ts, _seq)
-        row per key wins (tombstones participate, then readers filter)."""
-        order = [c for c in LWW_ORDER[:-1] if c in df.columns] + ["_seq"]
-        w = Window.partitionBy(*self.keys).orderBy(
-            *[F.col(c).desc() for c in order]
-        )
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        """LWW over stored rows (MOR reads and every ``_rewrite``): the
+        batch dedup's window with ``_seq`` for ``seq`` — newest
+        (ts, _seq) row per key wins; tombstones participate, then
+        readers filter them."""
+        order = tuple(c for c in LWW_ORDER[:-1] if c in df.columns)
+        return lww_winners_window(df, keys=self.keys, order=order + ("_seq",))
 
     def _live(self, files: list[dict], where: Column | None = None
               ) -> DataFrame:
@@ -617,8 +625,10 @@ class MicroLakeTable:
         2. ``_merge_quarantine``: dead-letter the expectation violators.
         3. ``_merge_lineage``: per-bucket lineage summed from the staged
            files' parquet footers — no Spark job.
-        4. ``_merge_rewrite_or_append``: CoW merges (staged ∪ old → LWW)
-           only buckets holding both; MOR appends the staged files.
+        4. ``_merge_rewrite_or_append``: CoW rewrites only buckets
+           holding both staged and old files, through ``_rewrite`` (the
+           body ``compact`` and ``migrate_step`` use); MOR appends the
+           staged files.
         """
         t0 = time.monotonic()
         if epoch <= self.last_committed_epoch:
@@ -707,8 +717,11 @@ class MicroLakeTable:
         elides the Exchange and pushes a WindowGroupLimit rank-limit
         into the sort), and bucket == partition id, so `partitionBy`
         writes one bucket directory per task. All counts ride one
-        Observation on the write — the WAL batch is scanned once.
-        Returns (evolved schema, commit tag, staged files, counts)."""
+        Observation on the write — the WAL batch is scanned once. The
+        delete marker is ``_tombstone``'s TRUE-or-NULL ``_deleted``, so
+        the staged footers carry each file's live row count
+        (``_merge_lineage``). Returns (evolved schema, commit tag,
+        staged files, counts)."""
         from pyspark.sql import Observation
 
         plan = self._evolve_schema(batch_df.schema)
@@ -754,12 +767,7 @@ class MicroLakeTable:
                 for f in evolved.fields
             ],
             F.col("seq").alias("_seq"),
-            (F.col("op") == "D").alias("_deleted"),
-            # NULL-unless-deleted marker: the footer's null_count is
-            # then the file's LIVE row count, which _merge_lineage
-            # reads instead of scanning. Staged files only; never part
-            # of the logical schema (META_COLS).
-            F.when(F.col("op") == "D", F.lit(1)).alias("_del1"),
+            _tombstone(F.col("op") == "D"),
         ).withColumn("_bucket", self._bucket_expr(self.keys[0]))
 
         # writer-unique dirname: a losing concurrent writer must never
@@ -807,9 +815,9 @@ class MicroLakeTable:
     @staticmethod
     def _merge_lineage(staged_files: list[dict]) -> list[dict]:
         """Phase 3: per-bucket lineage from the staged files' footer
-        stats (rows, ``_seq`` zone, ``_del1`` live count). The stage
-        wrote these files one call earlier, so a missing stat is a
-        fault: raise before anything commits."""
+        stats (rows, ``_seq`` zone, live rows = ``_deleted`` null
+        count). The stage wrote these files one call earlier, so a
+        missing stat is a fault: raise before anything commits."""
         need = ("rows", "seq_min", "seq_max", "live_rows")
         missing = [f["path"] for f in staged_files
                    if any(k not in f for k in need)]
@@ -853,64 +861,40 @@ class MicroLakeTable:
         keep = [f for f in old if f["bucket"] not in overlap]
         new_files = [f for f in staged_files if f["bucket"] not in overlap]
         if overlap:
-            payload_names = [f.name for f in evolved.fields]
-            old_files = [f for f in old if f["bucket"] in overlap]
-            staged_overlap = [f for f in staged_files
-                              if f["bucket"] in overlap]
-
-            def as_events(df: DataFrame) -> DataFrame:
-                return df.select(
-                    F.when(F.col("_deleted"), F.lit("D"))
-                    .otherwise(F.lit("U")).alias("op"),
-                    F.col("_seq").alias("seq"),
-                    *payload_names,
-                )
-
-            merged = lww_winners_window(
-                self._cluster(
-                    as_events(self._read_files(staged_overlap, schema=evolved))
-                    .unionByName(
-                        as_events(self._read_files(old_files, schema=evolved))
-                    )
-                ),
-                keys=self.keys,
-                order=LWW_ORDER,
+            # read under the epoch's evolved schema: a column this batch
+            # added is not committed yet, and old files read it as NULL
+            new_files += self._rewrite(
+                [f for f in old + staged_files if f["bucket"] in overlap],
+                f"epoch={epoch}-{commit_tag}.rw", schema=evolved,
             )
-            rewrite = merged.select(
-                *payload_names,
-                F.col("seq").alias("_seq"),
-                (F.col("op") == "D").alias("_deleted"),
-            ).withColumn("_bucket", self._bucket_expr(self.keys[0]))
-            rw_name = f"epoch={epoch}-{commit_tag}.rw"
-            self._write(rewrite).parquet(
-                os.path.join(self.path, "data", rw_name)
-            )
-            new_files += self._list_epoch_files(rw_name)
         return keep + new_files, read_dedup
 
     # ---------------- maintenance ----------------
 
-    def _rewrite(self, files: list[dict], kind: str,
-                 drop_tombstones: bool = False) -> list[dict]:
-        """The one rewrite body behind ``compact`` and ``migrate_step``:
-        read ``files``, resolve LWW across their generations (when
-        ``read_dedup`` is set), optionally drop tombstones, and write
-        the result under the CURRENT spec in one shuffle — ``_cluster``
-        makes partition id == bucket id, the LWW window reuses that
-        clustering, and each task writes one bucket file. Resolving
-        inside ``files`` is sound whenever they hold every generation
-        of their keys the reader would otherwise see together (a whole
-        bucket, or a whole old-spec bucket group); if other generations
-        remain, the caller keeps ``read_dedup`` set. Returns the new
-        file entries, uncommitted."""
-        df = self._cluster(self._read_files(files))
-        if self.manifest.get("read_dedup"):
-            df = self._read_lww(df)
+    def _rewrite(self, files: list[dict], dirname: str,
+                 drop_tombstones: bool = False,
+                 schema: T.StructType | None = None) -> list[dict]:
+        """The one rewrite body behind the CoW merge, ``compact`` and
+        ``migrate_step``: read ``files`` under ``schema`` (default: the
+        table schema), resolve LWW across their generations, optionally
+        drop tombstones, and write the result under the CURRENT spec to
+        ``data/<dirname>`` in one shuffle — ``_cluster`` makes partition
+        id == bucket id, the LWW window reuses that clustering, and each
+        task writes one bucket file. On one-row-per-key input the
+        resolve returns its input unchanged. Resolving inside ``files``
+        is sound whenever they hold every generation of their keys the
+        reader would otherwise see together (a whole bucket, or a whole
+        old-spec bucket group); if other generations remain, the caller
+        keeps ``read_dedup`` set. ``dirname`` keeps a ``.`` after
+        ``epoch=N`` so ``staged_root_keys`` never reads a rewrite as
+        the epoch's stage. Returns the new file entries, uncommitted."""
+        df = self._read_lww(self._cluster(self._read_files(files, schema)))
         if drop_tombstones:
             df = df.filter(~F.col("_deleted"))
-        out = df.withColumn("_bucket", self._bucket_expr(self.keys[0]))
-        dirname = (f"epoch={self.last_committed_epoch}"
-                   f".{kind}-{uuid.uuid4().hex[:8]}")
+        out = df.withColumns({
+            "_deleted": _tombstone(F.col("_deleted")),
+            "_bucket": self._bucket_expr(self.keys[0]),
+        })
         self._write(out).parquet(os.path.join(self.path, "data", dirname))
         return self._list_epoch_files(dirname)
 
@@ -954,8 +938,10 @@ class MicroLakeTable:
                              self.manifest["files"], [], metrics=None,
                              read_dedup=False, op=("compact-clear",))
             return 0
+        tag = uuid.uuid4().hex[:8]
         new_files = self._rewrite(
-            [f for fs in multi.values() for f in fs], "compact",
+            [f for fs in multi.values() for f in fs],
+            f"epoch={self.last_committed_epoch}.compact-{tag}",
             drop_tombstones,
         )
         keep = [f for f in self.manifest["files"] if f["bucket"] not in multi]
@@ -1018,9 +1004,9 @@ class MicroLakeTable:
         """One bounded migration round: rewrite up to ``max_buckets``
         old-spec bucket groups under the current spec, LWW-resolving
         each group on the way (``_rewrite``, the same body as
-        ``compact``). A key's old-spec bucket never changes, so a group
-        holds every pre-switch generation of its keys and the resolve
-        is exact: each migrated file holds at most one row per key.
+        ``compact`` and the CoW merge). A key's old-spec bucket never
+        changes, so a group holds every pre-switch generation of its
+        keys and the resolve is exact: each migrated file holds at most one row per key.
         Post-switch generations live in current-spec files, so
         ``read_dedup`` stays set and a later ``compact()`` folds them.
         Returns the number of old-spec groups left AFTER this round; 0
@@ -1043,7 +1029,10 @@ class MicroLakeTable:
         groups = sorted(old)[:max_buckets]
         picked = [f for g in groups for f in old[g]]
         picked_paths = {f["path"] for f in picked}
-        new_files = self._rewrite(picked, "migrate")
+        tag = uuid.uuid4().hex[:8]
+        new_files = self._rewrite(
+            picked, f"epoch={self.last_committed_epoch}.migrate-{tag}"
+        )
         keep = [f for f in self.manifest["files"]
                 if f["path"] not in picked_paths]
         remaining = len(old) - len(groups)
@@ -1472,11 +1461,12 @@ class MicroLakeTable:
             sz = _zone(md, "_seq")
             if sz is not None:
                 out["seq_min"], out["seq_max"] = int(sz[0]), int(sz[1])
-            # live rows via the _del1 null-count trick (see
-            # _merge_stage; staged files only): _del1 is NULL exactly
-            # on live rows, so its null_count summed over row groups
-            # counts them — commit-time lineage is footer arithmetic
-            dst = _stats(md, "_del1")
+            # live rows: ``_deleted`` is NULL exactly on live rows
+            # (``_tombstone``), so its null_count summed over row groups
+            # counts them — commit-time lineage is footer arithmetic.
+            # Only files a commit just wrote are statted, so files in
+            # the older FALSE-on-live encoding never reach here.
+            dst = _stats(md, "_deleted")
             if dst is not None and all(
                     st is not None and st.null_count is not None
                     for st in dst):

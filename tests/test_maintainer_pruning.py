@@ -211,9 +211,9 @@ def test_dim_wide_churn_falls_back_to_shuffle(spark, tmp_dir,
 
 def test_lineage_footer_fast_path_matches_scan(spark, tmp_dir):
     """r06: per-bucket lineage is derived from the staged files'
-    parquet footers (the _del1 null-count trick + _seq zones) instead
-    of a second Spark scan — the values must be identical to the scan,
-    deletes included."""
+    parquet footers (the null count of the TRUE-or-NULL _deleted
+    marker + _seq zones) instead of a second Spark scan — the values
+    must be identical to a real scan of the files, deletes included."""
     rows = [(i, "I", f"c{i % 7}", i // 7, 10 + i) for i in range(21)]
     rows += [(100, "D", "c0", 0, 200), (101, "U", "c1", 0, 201)]
     _events(spark, [(s, op, c, ti, ts_, f"t{s}", None)
@@ -232,7 +232,8 @@ def test_lineage_footer_fast_path_matches_scan(spark, tmp_dir):
         .groupBy("_bucket").agg(
             F.min("_seq").alias("seq_min"),
             F.max("_seq").alias("seq_max"),
-            F.count(F.when(~F.col("_deleted"), 1)).alias("rows_applied"),
+            F.count(F.when(F.col("_deleted").isNull(), 1))
+            .alias("rows_applied"),
             F.count(F.when(F.col("_deleted"), 1)).alias("rows_deleted"),
         ).collect()
     )

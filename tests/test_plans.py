@@ -15,12 +15,17 @@ pushing down) fails CI even though results stay correct.
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
+
 import pytest
 from pyspark.sql import functions as F
 
 from tap_github_search_spark.operators.dedup import lww_winners, lww_winners_ord
 from tap_github_search_spark.plans.queries import REGISTRY, _log
+from tap_github_search_spark.schema import CHANGE_EVENT_SCHEMA
 from tap_github_search_spark.sources.generator import ensure_changelog
+from tap_github_search_spark.streaming.job import normalize_events
+from tap_github_search_spark.table.microlake import MicroLakeTable
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -123,3 +128,54 @@ def test_search_counts_single_scan(spark):
     plan = plan_of(fn(spark, SF_DIR), "simple")
     assert plan.count("FileScan parquet") == 1
     assert "Union" not in plan
+
+
+def test_merge_and_rewrite_plan_one_shuffle(spark, tmp_dir, monkeypatch):
+    """The merge stage and the one rewrite body (CoW overlap rewrite,
+    ``compact``) each plan exactly ONE Exchange — the ``_cluster``
+    repartition — and the LWW window reuses its clustering (no second
+    Exchange). The stage keeps the shape of
+    plans/r06/merge_replay_store_after.txt: Exchange → Sort →
+    WindowGroupLimit → Window."""
+    plans: list[str] = []
+    orig = MicroLakeTable._write
+
+    def spy(self, df):
+        plans.append(plan_of(df))
+        return orig(self, df)
+
+    monkeypatch.setattr(MicroLakeTable, "_write", spy)
+
+    def events(seq0, op):
+        return spark.createDataFrame(
+            [(seq0 + i, op, f"c{i}", 0, "user", f"t{seq0 + i}", None,
+              datetime.fromtimestamp(1735689600 + seq0 + i, tz=timezone.utc))
+             for i in range(8)],
+            CHANGE_EVENT_SCHEMA,
+        )
+
+    t = MicroLakeTable.create(
+        spark, f"{tmp_dir}/t",
+        spark.createDataFrame([], CHANGE_EVENT_SCHEMA).drop("op", "seq")
+        .schema, n_buckets=4,
+    )
+    t.merge(events(0, "I"), 0, winner_transform=normalize_events)
+    assert len(plans) == 1                   # empty table: stage only
+    t.merge(events(100, "U"), 1)             # CoW: stage + rewrite
+    assert len(plans) == 3
+    t.merge(events(200, "D"), 2, merge_mode="mor")
+    assert t.compact() > 0                   # MOR append + compact
+    assert len(plans) == 5
+    stage, rewrite, compact = plans[0], plans[2], plans[4]
+
+    shape = ["Exchange", "Sort", "WindowGroupLimit", "Window"]
+    for plan, top in ((stage, ["ArrowEvalPython"]), (rewrite, []),
+                      (compact, [])):
+        tree, details = plan.split("\n\n", 1)
+        assert tree.count("Exchange") == 1   # the _cluster shuffle only
+        args = details.split(") Exchange\n", 1)[1].splitlines()[1]
+        assert "hashpartitioning(conv_id#" in args
+        assert ", 4), REPARTITION_BY_NUM" in args
+        # bottom-up: the window sorts and limits inside that clustering
+        pos = [tree.find(f"+- {op} (") for op in shape + top]
+        assert min(pos) >= 0 and pos == sorted(pos, reverse=True), tree

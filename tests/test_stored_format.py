@@ -1,0 +1,199 @@
+"""The stored-row format: every data-file writer stores the delete
+marker ``_deleted`` as TRUE on tombstones and NULL on live rows, with
+no second marker column, and files in the older encoding (FALSE on live
+rows plus a ``_del1`` 1-or-NULL column) still read the same."""
+
+from __future__ import annotations
+
+import os
+from datetime import datetime, timezone
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+
+from tap_github_search_spark.schema import CHANGE_EVENT_SCHEMA
+from tap_github_search_spark.table.microlake import MicroLakeTable
+
+PAYLOAD = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+
+
+def _ts(sec: int) -> datetime:
+    return datetime.fromtimestamp(1735689600 + sec, tz=timezone.utc)
+
+
+def _events(spark, rows):
+    """rows: (seq, op, conv, turn, ts_sec)"""
+    return spark.createDataFrame(
+        [(s, op, c, t, "user", f"t{s}", None, _ts(ts)) for s, op, c, t, ts
+         in rows],
+        CHANGE_EVENT_SCHEMA,
+    )
+
+
+def _oracle(*batches) -> dict:
+    """LWW over every event: key -> winning (seq, op)."""
+    win: dict = {}
+    for rows in batches:
+        for s, op, c, t, ts in rows:
+            if (c, t) not in win or (ts, s) > win[(c, t)][0]:
+                win[(c, t)] = ((ts, s), op)
+    return {k: (o[1], op) for k, (o, op) in win.items()}
+
+
+def _live(oracle: dict) -> dict:
+    """key -> text of the live winner."""
+    return {k: f"t{s}" for k, (s, op) in oracle.items() if op != "D"}
+
+
+def _snap(df) -> dict:
+    return {(r["conv_id"], r["turn_idx"]): r["text"] for r in df.collect()}
+
+
+# 20 keys inserted, plus a delete of a key never inserted (a staged
+# tombstone); then updates, deletes and a late update older than its
+# key's delete, which must not resurrect the key
+E0 = [(i, "I", f"c{i // 2}", i % 2, 100 + i) for i in range(20)] + [
+    (20, "D", "cz", 0, 120)
+]
+E1 = [(30 + i, "U", f"c{i}", 0, 200 + i) for i in range(5)] + [
+    (40, "D", "c5", 0, 210), (41, "D", "c6", 1, 211),
+    (42, "U", "c7", 0, 150),
+]
+E2 = [
+    (50, "U", "c5", 0, 205),   # older than c5/0's delete: loses
+    (51, "U", "c7", 1, 300), (52, "D", "c8", 1, 301),
+    (53, "I", "c10", 0, 302), (54, "U", "c0", 0, 303),
+]
+
+
+def _writer(dirname: str) -> str:
+    if dirname.startswith("bootstrap-"):
+        return "bootstrap"
+    for kind in ("rw", "compact", "migrate"):
+        if f".{kind}" in dirname:
+            return kind
+    return "stage"
+
+
+def test_every_writer_stores_true_or_null_marker(spark, tmp_dir):
+    """Stage, CoW rewrite, compact, migrate_step and from_snapshot each
+    write exactly the payload plus ``_seq`` and ``_deleted``, with
+    ``_deleted`` NULL on every live row and TRUE on every tombstone, so
+    a footer's ``_deleted`` null count is the file's live row count."""
+    cow = MicroLakeTable.create(
+        spark, f"{tmp_dir}/cow",
+        spark.createDataFrame([], CHANGE_EVENT_SCHEMA).drop("op", "seq")
+        .schema, n_buckets=4,
+    )
+    mor = MicroLakeTable.create(spark, f"{tmp_dir}/mor", cow.schema,
+                                n_buckets=4)
+    for epoch, rows in enumerate((E0, E1)):
+        cow.merge(_events(spark, rows), epoch)
+        mor.merge(_events(spark, rows), epoch, merge_mode="mor")
+    assert mor.compact() > 0
+    mor.rebucket_start(8)
+    assert mor.migrate_step() == 0
+    boot = MicroLakeTable.from_snapshot(
+        spark, f"{tmp_dir}/boot", cow.snapshot_df(), as_of_seq=99,
+        n_buckets=4,
+    )
+
+    oracle = _oracle(E0, E1)
+    n_tomb = sum(op == "D" for _, op in oracle.values())
+    assert n_tomb == 3
+    seen = set()
+    for table, tombs in ((cow, n_tomb), (mor, n_tomb), (boot, 0)):
+        data = os.path.join(table.path, "data")
+        for d in os.listdir(data):
+            for root, _, fns in os.walk(os.path.join(data, d)):
+                for fn in fns:
+                    if not fn.endswith(".parquet"):
+                        continue
+                    seen.add(_writer(d))
+                    pf = pq.ParquetFile(os.path.join(root, fn))
+                    assert set(pf.schema_arrow.names) == {
+                        *PAYLOAD, "_seq", "_deleted"}, (d, fn)
+                    marker = pf.read(columns=["_deleted"]).column(0)
+                    assert pc.sum(pc.equal(marker, False)).as_py() in (
+                        None, 0), (d, fn)
+        # the committed files: TRUE exactly on the oracle's tombstones,
+        # NULL exactly on its live rows, and the manifest's footer-read
+        # live count agrees with the data
+        n_true = n_null = 0
+        for f in table.manifest["files"]:
+            marker = pq.ParquetFile(
+                os.path.join(table.path, f["path"])
+            ).read(columns=["_deleted"]).column(0)
+            n_true += pc.sum(marker).as_py() or 0
+            n_null += marker.null_count
+            assert f["live_rows"] == marker.null_count
+        assert (n_true, n_null) == (tombs, len(_live(oracle)))
+        assert _snap(table.snapshot_df()) == _live(oracle)
+    assert seen == {"stage", "rw", "compact", "migrate", "bootstrap"}
+
+
+def _to_old_encoding(table: MicroLakeTable) -> None:
+    """Rewrite every committed file in place the way older engine
+    versions stored rows: ``_deleted`` FALSE on live rows, plus a
+    ``_del1`` column that is 1 on tombstones and NULL otherwise."""
+    for f in table.manifest["files"]:
+        path = os.path.join(table.path, f["path"])
+        t = pq.ParquetFile(path).read()
+        marker = pc.fill_null(t.column("_deleted"), False)
+        del1 = pc.if_else(marker, pa.scalar(1, pa.int32()),
+                          pa.scalar(None, pa.int32()))
+        t = t.set_column(t.schema.get_field_index("_deleted"), "_deleted",
+                         marker).append_column("_del1", del1)
+        pq.write_table(t, path)
+        # the local filesystem's checksum sidecar no longer matches
+        crc = os.path.join(os.path.dirname(path),
+                           f".{os.path.basename(path)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+
+
+def test_old_encoding_files_read_identically(spark, tmp_dir):
+    """A MOR table whose files all use the older encoding: snapshot,
+    point lookups, a CoW merge over it, the change feed across that
+    merge and a compaction all match the LWW oracle."""
+    t = MicroLakeTable.create(
+        spark, f"{tmp_dir}/t",
+        spark.createDataFrame([], CHANGE_EVENT_SCHEMA).drop("op", "seq")
+        .schema, n_buckets=4,
+    )
+    for epoch, rows in enumerate((E0, E1)):
+        t.merge(_events(spark, rows), epoch, merge_mode="mor")
+    _to_old_encoding(t)
+    names = pq.ParquetFile(
+        os.path.join(t.path, t.manifest["files"][0]["path"])
+    ).schema_arrow.names
+    assert "_del1" in names
+
+    before = _live(_oracle(E0, E1))
+    assert _snap(t.snapshot_df()) == before
+    assert t.lookup("c5", 0).count() == 0      # tombstone masks gen 0
+    assert t.lookup("cz", 0).count() == 0
+    assert _snap(t.lookup("c0", 0)) == {("c0", 0): "t30"}
+    assert _snap(t.lookup("c7", 0)) == {("c7", 0): "t42"}
+
+    v = t.manifest["version"]
+    t.merge(_events(spark, E2), 2)            # CoW over old-encoding files
+    after = _live(_oracle(E0, E1, E2))
+    assert _snap(t.snapshot_df()) == after
+    assert ("c5", 0) not in after
+
+    expected = {
+        **{k: "insert" for k in after.keys() - before.keys()},
+        **{k: "delete" for k in before.keys() - after.keys()},
+        **{k: "update" for k in after.keys() & before.keys()
+           if after[k] != before[k]},
+    }
+    feed = {(r["conv_id"], r["turn_idx"]): r["_change_type"]
+            for r in t.change_feed(v).collect()}
+    assert feed == expected
+    assert set(expected.values()) == {"insert", "update", "delete"}
+
+    assert t.compact() > 0
+    assert not t.manifest.get("read_dedup")
+    assert _snap(t.snapshot_df()) == after
