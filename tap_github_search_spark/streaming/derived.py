@@ -459,24 +459,6 @@ class DerivedChain:
 
     # ---------------- affected-key propagation ----------------
 
-    def _pre_epoch_version(self, table: MicroLakeTable,
-                           epoch: int) -> MicroLakeTable | None:
-        """Newest version of ``table`` committed BEFORE this epoch: walk
-        versions downward from the current manifest (1-2 loads in steady
-        state) instead of history(), which parses EVERY manifest ever
-        written — O(versions) driver work per epoch that compounds to
-        O(epochs²) over a long stream."""
-        v = table.manifest["version"]
-        while v >= 0:
-            try:
-                cand = MicroLakeTable.load(self.spark, table.path, v)
-            except FileNotFoundError:
-                return None  # expired by vacuum → no pre-epoch state
-            if cand.last_committed_epoch < epoch:
-                return cand
-            v -= 1
-        return None
-
     @staticmethod
     def _attach_key(df: DataFrame, spec: LevelSpec) -> DataFrame:
         """Attach a level's key to parent rows via its ``key_expr``. The
@@ -507,7 +489,9 @@ class DerivedChain:
         cur = self._attach_key(
             parent.snapshot_df(buckets=pb).join(aff, parent_key), spec
         ).select(spec.key)
-        prev = self._pre_epoch_version(parent, epoch)
+        # the newest parent version committed BEFORE this epoch (None:
+        # expired by vacuum → no pre-epoch state)
+        prev = parent.version_at_epoch(epoch - 1)
         if prev is not None:
             # the pre-epoch snapshot shares the spec unless a rebucket
             # landed in between — then its bucket ids don't align and

@@ -98,28 +98,17 @@ class TopologySnapshot:
 
     def _version_at(self, name: str, path: str,
                     epoch: int) -> MicroLakeTable:
-        """Newest manifest version of ``path`` whose applied epochs are
-        all ≤ ``epoch`` — the table's state as of that epoch, after any
-        maintenance (compaction rewrites commit with the fence they
-        preserve, so among equal-fence versions the newest is the same
-        logical state in its most compacted form)."""
-        head = MicroLakeTable.load(self.spark, path)
-        v = head.manifest["version"]
-        while v >= 0:
-            try:
-                cand = MicroLakeTable.load(self.spark, path, v)
-            except FileNotFoundError:
-                raise SnapshotExpiredError(
-                    f"table '{name}' has no retained version at epoch "
-                    f"{epoch}: version {v} was expired by vacuum — "
-                    f"raise keep_versions on the maintenance policy"
-                ) from None
-            if cand.last_committed_epoch <= epoch:
-                return cand
-            v -= 1
-        raise SnapshotExpiredError(
-            f"table '{name}' has no version at or before epoch {epoch}"
-        )
+        """The table's state as of ``epoch``: the newest manifest
+        version of ``path`` whose applied epochs are all ≤ ``epoch``
+        (``MicroLakeTable.version_at_epoch``)."""
+        cand = MicroLakeTable.load(self.spark, path).version_at_epoch(epoch)
+        if cand is None:
+            raise SnapshotExpiredError(
+                f"table '{name}' has no retained version at epoch "
+                f"{epoch}: it was expired by vacuum — raise "
+                f"keep_versions on the maintenance policy"
+            )
+        return cand
 
     def tables_at(self, epoch: int | None = None
                   ) -> dict[str, MicroLakeTable]:

@@ -31,6 +31,13 @@ implement 1:1 on a real cluster (SURVEY.md §7.2 step 3):
    on tombstones and NULL on live rows (``_tombstone``), so a footer's
    null count is the file's live row count; ``_read_files`` reads NULL
    back as FALSE (files written with FALSE on live rows read the same).
+ - **Scan planning from the file list alone**: every writer resolves
+   LWW before it writes, so a data file holds at most one row per key.
+   A read resolves LWW across files only when the files it reads need
+   it (``_needs_resolve``): two of them share a bucket id (merge-on-read
+   generations) or one is under an older partition spec (a pending
+   migration, ``migration_pending``). No manifest flag repeats either
+   fact — Iceberg plans a scan from the snapshot's file entries too.
 
 Reference analogs: Singer's at-least-once + PK-idempotent target
 (/root/reference/tap_github_search/search_count_streams.py:42) becomes
@@ -240,6 +247,13 @@ class MicroLakeTable:
     def last_committed_epoch(self) -> int:
         return self.manifest["last_committed_epoch"]
 
+    @property
+    def migration_pending(self) -> bool:
+        """A partition-spec migration is in flight: some data file is
+        still under an older spec (``_file_spec``)."""
+        return any(self._file_spec(f) != self.n_buckets
+                   for f in self.manifest["files"])
+
     # ---------------- read paths ----------------
 
     def _bucket_expr(self, col: str):
@@ -353,15 +367,29 @@ class MicroLakeTable:
         order = tuple(c for c in LWW_ORDER[:-1] if c in df.columns)
         return lww_winners_window(df, keys=self.keys, order=order + ("_seq",))
 
+    def _needs_resolve(self, files: list[dict]) -> bool:
+        """Can ``files`` hold more than one row of a key? Each data file
+        holds at most one (every writer resolves LWW first) and a key
+        lives only in its bucket, so only two files sharing a bucket id
+        or a file under an older spec (whose bucket ids address another
+        key population) can."""
+        seen: set[int] = set()
+        for f in files:
+            if self._file_spec(f) != self.n_buckets or f["bucket"] in seen:
+                return True
+            seen.add(f["bucket"])
+        return False
+
     def _live(self, files: list[dict], where: Column | None = None
               ) -> DataFrame:
         """The one live-read body behind every snapshot read: read
-        ``files``, resolve LWW across generations when ``read_dedup``
-        is set, drop tombstones, apply the caller's row filter
-        ``where`` (AFTER the resolve — filtering first could drop a
-        key's winner and resurrect a loser), project the payload."""
+        ``files``, resolve LWW across generations when those files need
+        it (``_needs_resolve`` — so a pruned read of single-file buckets
+        skips the resolve), drop tombstones, apply the caller's row
+        filter ``where`` (AFTER the resolve — filtering first could drop
+        a key's winner and resurrect a loser), project the payload."""
         df = self._read_files(files)
-        if self.manifest.get("read_dedup"):
+        if self._needs_resolve(files):
             df = self._read_lww(df)
         df = df.filter(~F.col("_deleted"))
         if where is not None:
@@ -371,8 +399,9 @@ class MicroLakeTable:
     def snapshot_df(self, buckets: list[int] | set[int] | None = None
                     ) -> DataFrame:
         """User-facing table state: live rows, payload columns only.
-        Under MOR (``read_dedup`` set by a generation-appending commit)
-        the per-key winner is resolved here; CoW tables read plain.
+        Where a bucket holds several MOR generations (or a migration is
+        pending) the per-key winner is resolved here; a table with one
+        file per bucket reads plain (``_live``).
 
         ``buckets``: restrict the read to these bucket ids' files
         (``_snapshot_buckets`` — the change_feed pruning path, exposed
@@ -643,7 +672,7 @@ class MicroLakeTable:
             self._merge_quarantine(batch_df, epoch, base_accept, rule_fail,
                                    quarantine_dir)
         lin_rows = self._merge_lineage(staged_files)
-        files, read_dedup = self._merge_rewrite_or_append(
+        files = self._merge_rewrite_or_append(
             epoch, commit_tag, staged_files, evolved, merge_mode
         )
 
@@ -668,8 +697,7 @@ class MicroLakeTable:
             metrics["events_quarantined"] = counts["events_quarantined"]
             metrics["quarantine_rules"] = counts["quarantine_rules"]
         self._commit(epoch, files, lineage, metrics, evolved,
-                     read_dedup=read_dedup, extra=extra_manifest,
-                     op=("merge",))
+                     extra=extra_manifest, op=("merge",))
         return MergeResult(
             epoch=epoch,
             events_in=events_in,
@@ -839,25 +867,19 @@ class MicroLakeTable:
     def _merge_rewrite_or_append(self, epoch: int, commit_tag: str,
                                  staged_files: list[dict],
                                  evolved: T.StructType, merge_mode: str
-                                 ) -> tuple[list[dict], bool]:
-        """Phase 4: the new manifest file list and ``read_dedup`` flag.
-        CoW rewrites only buckets overlapping existing data (an
-        insert-only epoch rewrites nothing); MOR (or a pending spec
-        migration) appends the staged generation."""
-        read_dedup = bool(self.manifest.get("read_dedup"))
-        if self.manifest.get("migration_pending"):
-            # during progressive spec migration the table is effective
-            # MOR: a CoW bucket rewrite keyed by bucket id would mix
-            # specs (an old-spec file's keys scatter across many
-            # current-spec buckets), so merges append generations and
-            # readers keep resolving LWW until migrate_step finishes
-            merge_mode = "mor"
-            read_dedup = True
+                                 ) -> list[dict]:
+        """Phase 4: the new manifest file list. CoW rewrites only
+        buckets overlapping existing data (an insert-only epoch rewrites
+        nothing); MOR appends the staged generation, and so does every
+        merge while a spec migration is pending: a CoW bucket rewrite
+        keyed by bucket id would mix specs (an old-spec file's keys
+        scatter across many current-spec buckets), so readers keep
+        resolving LWW until ``migrate_step`` finishes."""
         old = self.manifest["files"]
+        if merge_mode == "mor" or self.migration_pending:
+            return old + staged_files
         overlap = ({f["bucket"] for f in staged_files}
                    & {f["bucket"] for f in old})
-        if merge_mode == "mor":
-            return old + staged_files, read_dedup or bool(overlap)
         keep = [f for f in old if f["bucket"] not in overlap]
         new_files = [f for f in staged_files if f["bucket"] not in overlap]
         if overlap:
@@ -867,9 +889,18 @@ class MicroLakeTable:
                 [f for f in old + staged_files if f["bucket"] in overlap],
                 f"epoch={epoch}-{commit_tag}.rw", schema=evolved,
             )
-        return keep + new_files, read_dedup
+        return keep + new_files
 
     # ---------------- maintenance ----------------
+
+    def _files_by_bucket(self) -> dict[int, list[dict]]:
+        """The manifest's data files grouped by bucket id — the one
+        per-bucket view behind ``compact``, ``optimize`` and
+        ``stats``."""
+        out: dict[int, list[dict]] = {}
+        for f in self.manifest["files"]:
+            out.setdefault(f["bucket"], []).append(f)
+        return out
 
     def _rewrite(self, files: list[dict], dirname: str,
                  drop_tombstones: bool = False,
@@ -880,14 +911,15 @@ class MicroLakeTable:
         drop tombstones, and write the result under the CURRENT spec to
         ``data/<dirname>`` in one shuffle — ``_cluster`` makes partition
         id == bucket id, the LWW window reuses that clustering, and each
-        task writes one bucket file. On one-row-per-key input the
-        resolve returns its input unchanged. Resolving inside ``files``
-        is sound whenever they hold every generation of their keys the
-        reader would otherwise see together (a whole bucket, or a whole
-        old-spec bucket group); if other generations remain, the caller
-        keeps ``read_dedup`` set. ``dirname`` keeps a ``.`` after
-        ``epoch=N`` so ``staged_root_keys`` never reads a rewrite as
-        the epoch's stage. Returns the new file entries, uncommitted."""
+        task writes one bucket file holding at most one row per key (the
+        invariant ``_needs_resolve`` relies on). Resolving inside
+        ``files`` is sound whenever they hold every generation of their
+        keys the reader would otherwise see together (a whole bucket, or
+        a whole old-spec bucket group); generations left outside share a
+        bucket id with the output, so readers keep resolving them.
+        ``dirname`` keeps a ``.`` after ``epoch=N`` so
+        ``staged_root_keys`` never reads a rewrite as the epoch's stage.
+        Returns the new file entries, uncommitted."""
         df = self._read_lww(self._cluster(self._read_files(files, schema)))
         if drop_tombstones:
             df = df.filter(~F.col("_deleted"))
@@ -902,41 +934,25 @@ class MicroLakeTable:
                 max_buckets: int | None = None) -> int:
         """Rewrite every multi-file bucket into a single file (Iceberg's
         rewrite_data_files action), resolving MOR generations with LWW
-        along the way — afterwards the table reads plain again
-        (``read_dedup`` cleared). Snapshot-isolated like any commit:
-        readers of the old manifest keep their file list. With
-        ``drop_tombstones`` the delete markers are garbage-collected —
-        only safe once no replayable WAL segment predates them.
+        along the way — once no bucket holds two files (and no migration
+        is pending) the table reads plain again. Snapshot-isolated like
+        any commit: readers of the old manifest keep their file list.
+        With ``drop_tombstones`` the delete markers are
+        garbage-collected — only safe once no replayable WAL segment
+        predates them.
 
         ``max_buckets`` bounds one compaction commit (the worst buckets
         — most file generations — first): at 10^10 rows a full-table
         compaction in a single job is neither necessary nor wise; run
         incremental rounds instead (Iceberg's rewrite job groups).
-        Note: ``read_dedup`` stays set until NO multi-generation bucket
-        remains. Returns the number of buckets rewritten."""
-        by_bucket: dict[int, list[dict]] = {}
-        for f in self.manifest["files"]:
-            by_bucket.setdefault(f["bucket"], []).append(f)
-        multi = {b: fs for b, fs in by_bucket.items()
+        Returns the number of buckets rewritten; with nothing to
+        rewrite nothing is committed."""
+        multi = {b: fs for b, fs in self._files_by_bucket().items()
                  if len(fs) > 1 or drop_tombstones}
-        remaining_multi = 0
         if max_buckets is not None and len(multi) > max_buckets:
             worst = sorted(multi, key=lambda b: -len(multi[b]))[:max_buckets]
-            remaining_multi = sum(
-                1 for b, fs in multi.items()
-                if b not in worst and len(fs) > 1
-            )
             multi = {b: multi[b] for b in worst}
         if not multi:
-            if self.manifest.get("read_dedup") and not \
-                    self.manifest.get("migration_pending"):
-                # single-generation everywhere → safe to clear the flag
-                # (NOT during a spec migration: an old-spec file and a
-                # current-spec file with different bucket ids can hold
-                # the same key — bucket-id grouping can't see it)
-                self._commit(self.last_committed_epoch,
-                             self.manifest["files"], [], metrics=None,
-                             read_dedup=False, op=("compact-clear",))
             return 0
         tag = uuid.uuid4().hex[:8]
         new_files = self._rewrite(
@@ -945,15 +961,8 @@ class MicroLakeTable:
             drop_tombstones,
         )
         keep = [f for f in self.manifest["files"] if f["bucket"] not in multi]
-        # a bounded (max_buckets) round may leave multi-generation
-        # buckets behind — readers must keep resolving LWW until none
-        # remain
-        still_dedup = bool(self.manifest.get("read_dedup")) and (
-            remaining_multi > 0
-            or bool(self.manifest.get("migration_pending"))
-        )
         self._commit(self.last_committed_epoch, keep + new_files, [],
-                     metrics=None, read_dedup=still_dedup, op=("compact",))
+                     metrics=None, op=("compact",))
         return len(multi)
 
     # ------------- partition-spec evolution (progressive) -------------
@@ -961,7 +970,9 @@ class MicroLakeTable:
     def _file_spec(self, f: dict) -> int:
         """The bucket count a data file was written under. Files carry
         ``spec_n`` only while a migration is pending (stamped by
-        ``rebucket_start``); absent means the current spec."""
+        ``rebucket_start``); absent means the current spec. A file whose
+        spec differs from the table's IS the pending migration
+        (``migration_pending``)."""
         return int(f.get("spec_n", self.n_buckets))
 
     def rebucket_start(self, new_n_buckets: int) -> None:
@@ -971,16 +982,17 @@ class MicroLakeTable:
         of one multi-hour full-table rewrite).
 
         This commit is METADATA-ONLY: every existing file entry is
-        stamped with its spec (``spec_n``), the manifest flips to the
-        new bucket count, and ``migration_pending`` turns the table
-        into effective merge-on-read — post-switch merges append
-        generations (never rewrite across specs) and readers resolve
-        LWW, so correctness never depends on migration progress.
+        stamped with its spec (``spec_n``) and the manifest flips to the
+        new bucket count. The old-spec files make ``migration_pending``
+        true, which turns the table into effective merge-on-read —
+        post-switch merges append generations (never rewrite across
+        specs) and readers resolve LWW (``_needs_resolve``), so
+        correctness never depends on migration progress.
         Point reads stay correct throughout because ``lookup`` /
         ``scan_keys`` hash each key under EVERY file's own spec.
         ``change_feed`` intervals crossing the switch fall back to the
         full-snapshot diff via the ``last_rebucket_version`` fence."""
-        if self.manifest.get("migration_pending"):
+        if self.migration_pending:
             raise ValueError("a spec migration is already pending")
         new_n = int(new_n_buckets)
         if new_n == self.n_buckets:
@@ -991,10 +1003,8 @@ class MicroLakeTable:
         ]
         self._commit(
             self.last_committed_epoch, files, [], metrics=None,
-            read_dedup=True,
             extra={
                 "n_buckets": new_n,
-                "migration_pending": True,
                 "last_rebucket_version": self.manifest["version"] + 1,
             },
             op=("rebucket-start", new_n),
@@ -1006,11 +1016,12 @@ class MicroLakeTable:
         each group on the way (``_rewrite``, the same body as
         ``compact`` and the CoW merge). A key's old-spec bucket never
         changes, so a group holds every pre-switch generation of its
-        keys and the resolve is exact: each migrated file holds at most one row per key.
-        Post-switch generations live in current-spec files, so
-        ``read_dedup`` stays set and a later ``compact()`` folds them.
-        Returns the number of old-spec groups left AFTER this round; 0
-        clears ``migration_pending``. Each round's cost is proportional
+        keys and the resolve is exact: each migrated file holds at most
+        one row per key. Post-switch generations live in current-spec
+        files with the same bucket ids, so readers keep resolving them
+        until a ``compact()`` folds them. Returns the number of old-spec
+        groups left AFTER this round; at 0 the migration is complete
+        and a call commits nothing. Each round's cost is proportional
         to the groups it rewrites — safe inside a streaming
         maintenance window."""
         cur = self.n_buckets
@@ -1020,11 +1031,6 @@ class MicroLakeTable:
                 old.setdefault((self._file_spec(f), f["bucket"]), []
                                ).append(f)
         if not old:
-            if self.manifest.get("migration_pending"):
-                self._commit(self.last_committed_epoch,
-                             self.manifest["files"], [], metrics=None,
-                             extra={"migration_pending": False},
-                             op=("migrate-complete",))
             return 0
         groups = sorted(old)[:max_buckets]
         picked = [f for g in groups for f in old[g]]
@@ -1035,30 +1041,23 @@ class MicroLakeTable:
         )
         keep = [f for f in self.manifest["files"]
                 if f["path"] not in picked_paths]
-        remaining = len(old) - len(groups)
-        self._commit(
-            self.last_committed_epoch, keep + new_files, [],
-            metrics=None,
-            extra={"migration_pending": remaining > 0},
-            op=("migrate",),
-        )
-        return remaining
+        self._commit(self.last_committed_epoch, keep + new_files, [],
+                     metrics=None, op=("migrate",))
+        return len(old) - len(groups)
 
     def rebucket(self, new_n_buckets: int) -> int:
         """Partition-spec evolution in one call (Iceberg's REPLACE
         PARTITION FIELD + rewrite_data_files): bucket count must scale
         with table size so per-bucket rewrite cost and per-task winner
         state stay bounded. Composed from the progressive path —
-        ``rebucket_start``, ONE ``migrate_step`` over every old-spec
-        group, then ``compact()``, which finds one file per bucket and
-        only clears ``read_dedup`` — so the data is read and written
-        once and MOR generations come out LWW-resolved. Each step is a
-        snapshot-isolated commit; a handle that loses the
+        ``rebucket_start`` then ONE ``migrate_step`` over every old-spec
+        group, two commits — so the data is read and written once, MOR
+        generations come out LWW-resolved and every bucket holds one
+        file (the table reads plain). A handle that loses the
         ``rebucket_start`` race keeps the published spec. Returns the
         number of data files the table then holds."""
         self.rebucket_start(new_n_buckets)
         self.migrate_step(max_buckets=len(self.manifest["files"]))
-        self.compact()
         return len(self.manifest["files"])
 
     def vacuum(self, keep_versions: int = 1,
@@ -1141,9 +1140,9 @@ class MicroLakeTable:
         state is one bookmark blob per stream,
         /root/reference/tap_github/client.py:83-101).
 
-        Decision inputs are O(files) driver-side stats (manifest rows +
-        ``os.stat`` sizes) — NO data scan and NO Spark job unless an
-        action actually fires. Every action is bounded, so the same
+        Decision inputs are ``stats()`` and the per-bucket file counts —
+        O(files) driver-side work, NO data scan and NO Spark job unless
+        an action actually fires. Every action is bounded, so the same
         policy runs out-of-band (``maintain``) and inside a stream
         (``optimize_every``, the VERDICT r3 #3 contract):
 
@@ -1158,8 +1157,8 @@ class MicroLakeTable:
            ``max_generations`` file generations pays a per-read LWW
            resolve; run a bounded ``compact`` (worst buckets first,
            ``compact_batch`` per round so one maintenance window never
-           rewrites the whole table). Safe mid-migration: compact keeps
-           ``read_dedup`` set while ``migration_pending``.
+           rewrites the whole table). Safe mid-migration: readers keep
+           resolving while any old-spec file remains (``_needs_resolve``).
         3. **Manifest history growth** — more than ``keep_versions``
            retained snapshots: ``vacuum`` expires old manifests and
            deletes orphaned data files (age-gated by
@@ -1176,25 +1175,9 @@ class MicroLakeTable:
             "vacuumed_files": 0,
             "dry_run": dry_run,
         }
-        files = self.manifest["files"]
-        by_bucket: dict[int, int] = {}
-        for f in files:
-            by_bucket[f["bucket"]] = by_bucket.get(f["bucket"], 0) + 1
-        pileup = sorted(
-            (b for b, n in by_bucket.items() if n > max_generations),
-        )
-        total_bytes = 0
-        for f in files:
-            if "bytes" in f:  # recorded at commit from the footer read
-                total_bytes += f["bytes"]
-                continue
-            try:  # pre-stats manifests: stat on demand
-                total_bytes += os.path.getsize(
-                    os.path.join(self.path, f["path"])
-                )
-            except OSError:
-                pass
-        report["total_bytes"] = total_bytes
+        pileup = sum(1 for fs in self._files_by_bucket().values()
+                     if len(fs) > max_generations)
+        total_bytes = report["total_bytes"] = self.stats()["total_bytes"]
         per_bucket = total_bytes / max(1, self.n_buckets)
 
         # Maintenance runs concurrently with ingest in production; every
@@ -1203,7 +1186,7 @@ class MicroLakeTable:
         # record it and let the next scheduled run retry against the
         # fresher snapshot (Iceberg's maintenance procedures behave the
         # same way: commit conflict → retry later).
-        if self.manifest.get("migration_pending"):
+        if self.migration_pending:
             report["actions"].append(
                 f"migrate_step ({compact_batch} bucket groups/round)"
             )
@@ -1229,9 +1212,9 @@ class MicroLakeTable:
                 except ConcurrentCommitError:
                     report["actions"].append("rebucket_start lost commit race")
         if pileup:
-            n = min(len(pileup), compact_batch)
+            n = min(pileup, compact_batch)
             report["actions"].append(
-                f"compact {n}/{len(pileup)} buckets "
+                f"compact {n}/{pileup} buckets "
                 f"(>{max_generations} generations)"
             )
             if not dry_run:
@@ -1344,27 +1327,36 @@ class MicroLakeTable:
         summary). ``total_rows`` counts physical rows incl. tombstones
         and unresolved MOR generations; it is the scan-cost input for a
         cost-based planner, not the live-row count (that requires the
-        LWW resolve ``snapshot_df().count()`` performs)."""
+        LWW resolve ``snapshot_df().count()`` performs). ``read_dedup``
+        (a full read resolves LWW) and ``migration_pending`` are derived
+        from the file list (``_needs_resolve``); an entry committed
+        before sizes were recorded is sized with ``os.stat``."""
         files = self.manifest["files"]
-        per_bucket: dict[int, int] = {}
-        for f in files:
-            per_bucket[f["bucket"]] = per_bucket.get(f["bucket"], 0) + 1
+        per_bucket = self._files_by_bucket()
+        old_spec = sum(1 for f in files
+                       if self._file_spec(f) != self.n_buckets)
+
+        def _bytes(f: dict) -> int:
+            if "bytes" in f:  # recorded at commit from the footer read
+                return f["bytes"]
+            try:
+                return os.path.getsize(os.path.join(self.path, f["path"]))
+            except OSError:
+                return 0
+
         return {
             "version": self.manifest["version"],
             "last_committed_epoch": self.last_committed_epoch,
             "n_buckets": self.n_buckets,
             "n_files": len(files),
             "buckets_with_data": len(per_bucket),
-            "max_generations": max(per_bucket.values(), default=0),
+            "max_generations": max(map(len, per_bucket.values()),
+                                   default=0),
             "total_rows": sum(f.get("rows", 0) for f in files),
-            "total_bytes": sum(f.get("bytes", 0) for f in files),
-            "read_dedup": bool(self.manifest.get("read_dedup")),
-            "migration_pending": bool(
-                self.manifest.get("migration_pending")
-            ),
-            "old_spec_files": sum(
-                1 for f in files if self._file_spec(f) != self.n_buckets
-            ),
+            "total_bytes": sum(map(_bytes, files)),
+            "read_dedup": self._needs_resolve(files),
+            "migration_pending": old_spec > 0,
+            "old_spec_files": old_spec,
         }
 
     def read_between(self, ts_min, ts_max) -> DataFrame:
@@ -1376,11 +1368,12 @@ class MicroLakeTable:
         [ts_min, ts_max] interval misses the window provably holds no
         qualifying rows and is skipped before the scan — the
         replication-window read pattern ("what changed this hour") at
-        file cost proportional to the window, not the table. When
-        ``read_dedup`` is set, a key's WINNING row may live in a file
-        the window would prune while a losing (older) row is inside it
-        — pruning first would resurrect losers, so the LWW resolve runs
-        over all generations and only the row filter applies.
+        file cost proportional to the window, not the table. When the
+        full file list needs an LWW resolve (``_needs_resolve``), a
+        key's WINNING row may live in a file the window would prune
+        while a losing (older) row is inside it — pruning first would
+        resurrect losers, so the resolve runs over all generations and
+        only the row filter applies.
         """
         from datetime import datetime, timezone
 
@@ -1395,7 +1388,7 @@ class MicroLakeTable:
 
         lo, hi = _norm(ts_min), _norm(ts_max)
         files = self.manifest["files"]
-        if not self.manifest.get("read_dedup"):
+        if not self._needs_resolve(files):
             files = [
                 f for f in files
                 if "ts_min" not in f
@@ -1563,11 +1556,15 @@ class MicroLakeTable:
         lineage: list[dict],
         metrics: dict | None,
         evolved_schema: T.StructType | None = None,
-        read_dedup: bool | None = None,
         extra: dict | None = None,
         op: tuple | None = None,
     ) -> None:
         m = dict(self.manifest)
+        # flags older engine versions stored beside the file list; both
+        # are derived from it now (``_needs_resolve``), so a commit on
+        # an older manifest drops them rather than carry stale values
+        for stale in ("read_dedup", "migration_pending"):
+            m.pop(stale, None)
         if op is not None:
             m["commit_op"] = list(op)
         # provenance stamp for version-collision triage: manifests
@@ -1583,8 +1580,6 @@ class MicroLakeTable:
         m["version"] = self.manifest["version"] + 1
         m["last_committed_epoch"] = epoch
         m["files"] = files
-        if read_dedup is not None:
-            m["read_dedup"] = read_dedup
         if evolved_schema is not None:
             m["schema"] = evolved_schema.jsonValue()
         m["lineage"] = self.manifest["lineage"] + lineage
@@ -1813,7 +1808,8 @@ class MicroLakeTable:
 
     def history(self) -> list[dict]:
         """All committed snapshot versions (manifest catalog): version,
-        epoch, file count — Iceberg's snapshots metadata table."""
+        epoch, file count and whether a full read resolves LWW —
+        Iceberg's snapshots metadata table."""
         mdir = os.path.join(self.path, "_manifests")
         out = []
         for name in sorted(os.listdir(mdir)):
@@ -1826,10 +1822,30 @@ class MicroLakeTable:
                     "version": m["version"],
                     "last_committed_epoch": m["last_committed_epoch"],
                     "n_files": len(m["files"]),
-                    "read_dedup": bool(m.get("read_dedup")),
+                    "read_dedup": MicroLakeTable(
+                        self.spark, self.path, m
+                    )._needs_resolve(m["files"]),
                 }
             )
         return out
+
+    def version_at_epoch(self, epoch: int) -> "MicroLakeTable | None":
+        """The newest version at or below this handle's whose fence is
+        ``<= epoch`` — the table's state as of that epoch, after any
+        maintenance (rewrites commit with the fence they preserve, so
+        among equal-fence versions the newest is the most compacted
+        form). Walks versions downward (1-2 loads in steady state)
+        instead of ``history()``, which parses every manifest ever
+        written. None when that version was expired by ``vacuum`` or
+        never existed."""
+        for v in range(self.manifest["version"], -1, -1):
+            try:
+                cand = MicroLakeTable.load(self.spark, self.path, v)
+            except FileNotFoundError:
+                return None
+            if cand.last_committed_epoch <= epoch:
+                return cand
+        return None
 
     def snapshot_at(self, version: int) -> DataFrame:
         """Time travel: the user-facing state as of an older version."""
@@ -2102,7 +2118,7 @@ class MicroLakeTable:
             rebucket_v = int(new.manifest.get("last_rebucket_version", -1))
             if old.n_buckets != new.n_buckets or rebucket_v > from_version:
                 full_scan = True
-            elif old.manifest.get("migration_pending"):
+            elif old.migration_pending:
                 # Progressive-migration fence: migrate_step (and compact
                 # while a migration is pending) relocates old-spec rows
                 # into current-spec bucket files WITHOUT lineage rows and
@@ -2111,7 +2127,7 @@ class MicroLakeTable:
                 # later in the interval sit in old-spec files on the old
                 # side (always included by _snapshot_buckets) but in
                 # unselected new-spec buckets on the new side — phantom
-                # deletes. migration_pending at from_version is implied
+                # deletes. A pending migration at from_version is implied
                 # by ANY cross-spec movement inside the interval
                 # (rebucket_start inside it is already fenced above), so
                 # forcing the spec-independent full diff here is

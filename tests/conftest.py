@@ -1,12 +1,15 @@
 from __future__ import annotations
 
+import pathlib
 import shutil
 
 import pytest
 
 from tap_github_search_spark.session import get_spark
 
-TMP = "/root/repo/data/tmp/pytest"
+#: per-checkout scratch root, so suites run from two clones never share
+#: (or ``rmtree``) each other's tables
+TMP = str(pathlib.Path(__file__).resolve().parents[1] / "data/tmp/pytest")
 
 
 @pytest.fixture(scope="session")

@@ -486,12 +486,12 @@ def test_rebucket_loser_keeps_published_spec(spark, tmp_dir):
         w2.rebucket(16)
     assert w2.manifest["n_buckets"] == 4  # handle matches what it loaded
     # published table carries the winner's spec + the evolution fence,
-    # which points at the winner's rebucket-start commit (then come its
-    # migrate and compact-clear commits)
+    # which points at the winner's rebucket-start commit (then comes its
+    # migrate commit)
     fresh = MicroLakeTable.load(spark, f"{tmp_dir}/t")
     assert fresh.n_buckets == 8
     fence = fresh.manifest["last_rebucket_version"]
-    assert fence == fresh.manifest["version"] - 2
+    assert fence == fresh.manifest["version"] - 1
     start = MicroLakeTable.load(spark, f"{tmp_dir}/t", fence)
     assert start.manifest["commit_op"] == ["rebucket-start", 8]
 

@@ -187,7 +187,7 @@ def test_cli_maintain_reports_and_acts(spark, tmp_dir, capsys):
     assert rep["compacted_buckets"] > 0
     assert any(a.startswith("compact") for a in rep["actions"])
     assert not MicroLakeTable.load(spark, f"{tmp_dir}/t") \
-        .manifest.get("read_dedup")
+        .stats()["read_dedup"]
 
     rc = main(["maintain", "--table", f"{tmp_dir}/t",
                "--max-generations", "1", "--keep-versions", "100"])

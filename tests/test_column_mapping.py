@@ -128,12 +128,12 @@ def test_rename_then_mor_and_compact_roundtrip(spark, tmp_dir):
                           for i in range(8)]).withColumnRenamed("text", "body")
     t.merge(upd, epoch=1, merge_mode="mor")
     t2 = MicroLakeTable.load(spark, table.path)
-    assert t2.manifest.get("read_dedup")
+    assert t2.stats()["read_dedup"]
     assert {r["body"] for r in t2.snapshot_df().collect()} == \
         {f"v2-{i}" for i in range(8)}
     t2.compact()
     t3 = MicroLakeTable.load(spark, table.path)
-    assert not t3.manifest.get("read_dedup")
+    assert not t3.stats()["read_dedup"]
     assert {r["body"] for r in t3.snapshot_df().collect()} == \
         {f"v2-{i}" for i in range(8)}
     # compacted files still carry the physical name

@@ -3,7 +3,8 @@ deployment settings below. A new tuning option belongs in a constant
 (tests monkeypatch it), not in another ``SPARK_GRAFT_*`` variable. The
 maintenance policy's keyword set and the ``maintain`` CLI flags are
 pinned too — the policy has one path, with no switch between
-alternatives."""
+alternatives. So is the commit-op vocabulary: a new commit kind (say,
+one that only flips a manifest flag) shows up here in review."""
 
 from __future__ import annotations
 
@@ -90,3 +91,58 @@ def test_maintain_flag_set_is_pinned():
     flags = {opt for a in sub.choices["maintain"]._actions
              for opt in a.option_strings} - {"-h", "--help"}
     assert flags == MAINTAIN_FLAGS
+
+
+#: the first element of every ``op=(...)`` a commit records
+COMMIT_OPS = {
+    "merge", "rename", "drop-column", "compact", "rebucket-start",
+    "migrate", "expire-metadata",
+}
+
+#: facts the file list already states (``MicroLakeTable._needs_resolve``,
+#: ``migration_pending``); older manifests may still carry them as keys
+DERIVED_KEYS = {"read_dedup", "migration_pending"}
+
+
+def _engine_trees():
+    root = pathlib.Path(tap_github_search_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        yield (path.relative_to(root),
+               ast.parse(path.read_text(), filename=str(path)))
+
+
+def test_commit_op_vocabulary_is_pinned():
+    ops: dict[str, list[str]] = {}
+    for rel, tree in _engine_trees():
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "_commit"):
+                continue
+            for kw in node.keywords:
+                if kw.arg != "op":
+                    continue
+                where = f"{rel}:{node.lineno}"
+                head = kw.value.elts[0] if isinstance(
+                    kw.value, ast.Tuple) and kw.value.elts else None
+                assert isinstance(head, ast.Constant) and isinstance(
+                    head.value, str), f"non-literal commit op at {where}"
+                ops.setdefault(head.value, []).append(where)
+    assert set(ops) == COMMIT_OPS, ops
+
+
+def test_engine_reads_no_derived_manifest_flag():
+    reads = []
+    for rel, tree in _engine_trees():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Subscript):
+                key = node.slice
+            elif (isinstance(node, ast.Call)
+                  and isinstance(node.func, ast.Attribute)
+                  and node.func.attr == "get" and node.args):
+                key = node.args[0]
+            else:
+                continue
+            if isinstance(key, ast.Constant) and key.value in DERIVED_KEYS:
+                reads.append(f"{rel}:{node.lineno}")
+    assert not reads, reads

@@ -42,7 +42,7 @@ def test_mor_multi_epoch_replay_matches_oracle_and_cow(spark, tmp_dir):
                     n_buckets=8, n_epochs=4, merge_mode="mor")
     cow, _ = replay(spark, [f"{tmp_dir}/log"], f"{tmp_dir}/cow",
                     n_buckets=8, n_epochs=4, merge_mode="cow")
-    assert mor.manifest.get("read_dedup") is True
+    assert mor.stats()["read_dedup"] is True
     got_mor = _canon(mor.snapshot_df().toPandas())
     got_cow = _canon(cow.snapshot_df().toPandas())
     oracle = _canon(_oracle(f"{tmp_dir}/log/*.parquet"))
@@ -58,7 +58,7 @@ def test_mor_compaction_folds_generations(spark, tmp_dir):
                       n_buckets=8, n_epochs=4, merge_mode="mor")
     before = _canon(table.snapshot_df().toPandas())
     assert table.compact() > 0
-    assert table.manifest.get("read_dedup") is False
+    assert table.stats()["read_dedup"] is False
     per_bucket = {}
     for f in table.manifest["files"]:
         per_bucket[f["bucket"]] = per_bucket.get(f["bucket"], 0) + 1
@@ -203,13 +203,13 @@ def test_rebucket_partition_spec_evolution(spark, tmp_dir):
 
 def test_incremental_compaction_rounds(spark, tmp_dir):
     """compact(max_buckets=K) compacts the worst buckets first, keeps
-    read_dedup until no multi-generation bucket remains, and converges
+    resolving reads until no multi-generation bucket remains, and converges
     over rounds with the final state intact."""
     write_changelog(spark, f"{tmp_dir}/log", 150, n_files=6, delete_pct=20)
     table, _ = replay(spark, [f"{tmp_dir}/log"], f"{tmp_dir}/t",
                       n_buckets=8, n_epochs=4, merge_mode="mor")
     before = table.snapshot_df().orderBy("conv_id", "turn_idx").collect()
-    assert table.manifest["read_dedup"]
+    assert table.stats()["read_dedup"]
 
     def multi_buckets():
         per = {}
@@ -220,7 +220,7 @@ def test_incremental_compaction_rounds(spark, tmp_dir):
     assert multi_buckets() > 2
     n1 = table.compact(max_buckets=2)
     assert n1 == 2
-    assert table.manifest["read_dedup"]  # generations remain elsewhere
+    assert table.stats()["read_dedup"]  # generations remain elsewhere
     mid = table.snapshot_df().orderBy("conv_id", "turn_idx").collect()
     assert mid == before
     rounds = 0
@@ -228,7 +228,7 @@ def test_incremental_compaction_rounds(spark, tmp_dir):
         table.compact(max_buckets=2)
         rounds += 1
     assert multi_buckets() == 0
-    assert not table.manifest.get("read_dedup")
+    assert not table.stats()["read_dedup"]
     assert table.snapshot_df().orderBy("conv_id", "turn_idx").collect() == before
 
 
@@ -284,3 +284,47 @@ def test_stream_optimize_every_runs_policy_in_stream(spark, tmp_dir):
                 optimize_opts={"max_generations": 1, "keep_versions": 2,
                                "grace_seconds": 0.0})
     _assert_table_equals_oracle(t2, f"'{tmp_dir}/log/*.parquet'")
+
+
+def test_pruned_read_of_single_file_buckets_skips_resolve(spark, tmp_dir,
+                                                          monkeypatch):
+    """Whether a read resolves LWW is decided on the files it reads: a
+    bucket-pruned read of single-file buckets skips the resolve even
+    while another bucket holds two MOR generations; a read that
+    includes that bucket resolves."""
+    from tap_github_search_spark.table.microlake import (
+        MicroLakeTable,
+        murmur3_x86_32,
+    )
+    from tests.test_engine import _events
+
+    def bucket(k: str) -> int:
+        return murmur3_x86_32(k.encode()) % 4
+
+    keys = [f"c{i}" for i in range(16)]
+    table = MicroLakeTable.create(
+        spark, f"{tmp_dir}/t",
+        _events(spark, []).drop("op", "seq").schema, n_buckets=4,
+    )
+    table.merge(_events(spark, [(i, "I", k, 0, 10 + i)
+                                for i, k in enumerate(keys)]), 0,
+                merge_mode="mor")
+    table.merge(_events(spark, [(100, "U", "c0", 0, 100)]), 1,
+                merge_mode="mor")
+    assert table.stats()["read_dedup"]
+    hot = bucket("c0")
+    cold = sorted({bucket(k) for k in keys} - {hot})
+    assert cold
+
+    calls = []
+    orig = MicroLakeTable._read_lww
+    monkeypatch.setattr(MicroLakeTable, "_read_lww",
+                        lambda self, df: calls.append(1) or orig(self, df))
+    got = {r["conv_id"] for r in table.snapshot_df(buckets=cold).collect()}
+    assert got == {k for k in keys if bucket(k) in cold}
+    assert calls == []
+    hot_rows = table.snapshot_df(buckets=[hot]).collect()
+    assert calls == [1]
+    assert sorted(r["conv_id"] for r in hot_rows) == \
+        sorted(k for k in keys if bucket(k) == hot)
+    assert {r["text"] for r in hot_rows if r["conv_id"] == "c0"} == {"t100"}

@@ -24,13 +24,13 @@ def test_optimize_compacts_mor_pileup(spark, tmp_dir):
                for i in range(10)]
         table.merge(_events(spark, upd), epoch=e, merge_mode="mor")
     before = table.snapshot_df().orderBy("conv_id", "turn_idx").collect()
-    assert table.manifest.get("read_dedup")
+    assert table.stats()["read_dedup"]
 
     rep = table.optimize(max_generations=3, keep_versions=100)
     assert rep["compacted_buckets"] > 0
     assert any(a.startswith("compact") for a in rep["actions"])
     t2 = MicroLakeTable.load(spark, table.path)
-    assert not t2.manifest.get("read_dedup")
+    assert not t2.stats()["read_dedup"]
     after = t2.snapshot_df().orderBy("conv_id", "turn_idx").collect()
     assert after == before
 
@@ -57,19 +57,19 @@ def test_optimize_starts_migration_on_growth_and_compacts(spark, tmp_dir):
     t2 = MicroLakeTable.load(spark, table.path)
     assert t2.n_buckets == rep["rebucketed_to"]
     assert (t2.n_buckets & (t2.n_buckets - 1)) == 0  # power of two
-    assert t2.manifest["migration_pending"]
+    assert t2.stats()["migration_pending"]
 
     for _ in range(5):
         t2.optimize(target_bucket_bytes=1024, max_generations=0,
                     keep_versions=100)
         t2 = MicroLakeTable.load(spark, table.path)
-        if not t2.manifest.get("migration_pending"):
+        if not t2.stats()["migration_pending"]:
             break
-    assert not t2.manifest.get("migration_pending")
+    assert not t2.stats()["migration_pending"]
     t2.optimize(target_bucket_bytes=1024, max_generations=0,
                 keep_versions=100)
     t2 = MicroLakeTable.load(spark, table.path)
-    assert not t2.manifest.get("read_dedup")
+    assert not t2.stats()["read_dedup"]
     assert t2.n_buckets == rep["rebucketed_to"]  # no second growth step
     after = t2.snapshot_df().orderBy("conv_id", "turn_idx").collect()
     assert after == before
@@ -239,7 +239,7 @@ def test_read_between_prunes_files_by_ts_zone(spark, tmp_dir):
     table.merge(_events(spark, [(90, "U", a_keys[0], 0, 70_000, "late")]),
                 epoch=2, merge_mode="mor")
     t2 = MicroLakeTable.load(spark, f"{tmp_dir}/t")
-    assert t2.manifest.get("read_dedup")
+    assert t2.stats()["read_dedup"]
     again = t2.read_between(_ts(50), _ts(200))
     got2 = {r["conv_id"] for r in again.collect()}
     assert a_keys[0] not in got2  # its winner now lives at ts=70000
@@ -374,4 +374,4 @@ def test_optimize_tolerates_commit_race(spark, tmp_dir):
     rep2 = fresh.optimize(max_generations=0, keep_versions=1000)
     assert rep2["compacted_buckets"] > 0
     assert not MicroLakeTable.load(spark, table.path) \
-        .manifest.get("read_dedup")
+        .stats()["read_dedup"]

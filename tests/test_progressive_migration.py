@@ -43,7 +43,7 @@ def test_progressive_migration_end_to_end(spark, tmp_dir):
     table.rebucket_start(8)
     t = MicroLakeTable.load(spark, table.path)
     assert t.n_buckets == 8
-    assert t.manifest["migration_pending"] and t.manifest["read_dedup"]
+    assert t.stats()["migration_pending"] and t.stats()["read_dedup"]
     assert {f["path"] for f in t.manifest["files"]} == files_before
     assert all(f["spec_n"] == 2 for f in t.manifest["files"])
 
@@ -76,13 +76,13 @@ def test_progressive_migration_end_to_end(spark, tmp_dir):
         if rem == 0:
             break
     assert rounds >= 2  # genuinely incremental (2 old buckets, 1/round)
-    assert not t.manifest["migration_pending"]
+    assert not t.stats()["migration_pending"]
     assert t.stats()["old_spec_files"] == 0
-    # read_dedup persists until compaction resolves the generations
-    assert t.manifest["read_dedup"]
+    # reads resolve until compaction folds the generations
+    assert t.stats()["read_dedup"]
     t.compact()
     t = MicroLakeTable.load(spark, table.path)
-    assert not t.manifest.get("read_dedup")
+    assert not t.stats()["read_dedup"]
 
     # final state = before + the two mid-migration changes
     expect = before.copy()
@@ -122,7 +122,7 @@ def test_optimize_drives_progressive_migration(spark, tmp_dir):
     rep = table.optimize(target_bucket_bytes=1024, keep_versions=500)
     assert any("rebucket_start" in a for a in rep["actions"])
     t = MicroLakeTable.load(spark, table.path)
-    assert t.manifest["migration_pending"]
+    assert t.stats()["migration_pending"]
     assert t.n_buckets == rep["rebucketed_to"] > 2
 
     seen_remaining = []
@@ -132,9 +132,9 @@ def test_optimize_drives_progressive_migration(spark, tmp_dir):
         t = MicroLakeTable.load(spark, table.path)
         if "migration_remaining" in rep:
             seen_remaining.append(rep["migration_remaining"])
-        if not t.manifest.get("migration_pending"):
+        if not t.stats()["migration_pending"]:
             break
-    assert not t.manifest.get("migration_pending")
+    assert not t.stats()["migration_pending"]
     assert len(seen_remaining) >= 2  # several bounded rounds, not one
     assert seen_remaining == sorted(seen_remaining, reverse=True)
     pd.testing.assert_frame_equal(_snap(t), before, check_dtype=False)
@@ -202,7 +202,7 @@ def test_change_feed_bookmark_mid_migration_no_phantom_deletes(
     without lineage and without bumping last_rebucket_version, so the
     naive incremental diff sees the moved keys on the old side (old-spec
     files always included) but not on the bucket-restricted new side.
-    The fence: migration_pending at from_version forces the
+    The fence: a pending migration at from_version forces the
     spec-independent full diff."""
     table = _seed(spark, tmp_dir)
     table.rebucket_start(8)
@@ -212,7 +212,7 @@ def test_change_feed_bookmark_mid_migration_no_phantom_deletes(
     t.merge(_events(spark, [(500, "U", "k007", 0, 500, "mid")]), epoch=1)
     t = MicroLakeTable.load(spark, table.path)
     v_bookmark = t.manifest["version"]
-    assert t.manifest["migration_pending"]  # bookmark is mid-migration
+    assert t.stats()["migration_pending"]  # bookmark is mid-migration
 
     # another change after the bookmark, then migrate to completion
     t.merge(_events(spark, [(600, "U", "k009", 0, 600, "late")]), epoch=2)
@@ -220,7 +220,7 @@ def test_change_feed_bookmark_mid_migration_no_phantom_deletes(
     while t.migrate_step(max_buckets=1):
         t = MicroLakeTable.load(spark, table.path)
     t = MicroLakeTable.load(spark, table.path)
-    assert not t.manifest.get("migration_pending")
+    assert not t.stats()["migration_pending"]
 
     feed = t.change_feed(v_bookmark).collect()
     full = t.change_feed(v_bookmark, full_scan=True).collect()
@@ -246,14 +246,14 @@ def _two_generations(spark, tmp_dir, n=40):
     table.merge(_events(spark, v2), epoch=table.last_committed_epoch + 1,
                 merge_mode="mor")
     t = MicroLakeTable.load(spark, table.path)
-    assert t.manifest["read_dedup"] and t.stats()["max_generations"] == 2
+    assert t.stats()["read_dedup"] and t.stats()["max_generations"] == 2
     dirs = set(os.listdir(os.path.join(t.path, "data")))
     return t, dirs
 
 
 def _assert_resolved(t, before):
-    assert not t.manifest.get("read_dedup")
-    assert not t.manifest.get("migration_pending")
+    assert not t.stats()["read_dedup"]
+    assert not t.stats()["migration_pending"]
     assert t.stats()["old_spec_files"] == 0
     got = _snap(t)
     pd.testing.assert_frame_equal(got, before, check_dtype=False)
@@ -264,7 +264,7 @@ def _assert_resolved(t, before):
 def test_migrate_step_resolves_mor_generations(spark, tmp_dir):
     """Regression: migrate_step used to be a pure repartition, so a
     migrated file could hold every generation of a key; the following
-    compact() then saw one file per bucket, cleared ``read_dedup`` and
+    compact() then saw one file per bucket, stopped resolving reads and
     superseded ``v1`` rows became visible."""
     t, _ = _two_generations(spark, tmp_dir)
     before = _snap(t)
@@ -281,8 +281,9 @@ def test_migrate_step_resolves_mor_generations(spark, tmp_dir):
 
 def test_rebucket_resolves_mor_generations_in_one_rewrite(spark, tmp_dir):
     """``rebucket`` = rebucket_start + one migrate_step over every
-    group + compact: one new data directory (the same I/O as a
-    full-table rewrite), ``read_dedup`` cleared, snapshot unchanged."""
+    group: one new data directory (the same I/O as a full-table
+    rewrite), one file per bucket so reads resolve nothing, snapshot
+    unchanged."""
     import os
 
     t, dirs = _two_generations(spark, tmp_dir)
@@ -296,10 +297,9 @@ def test_rebucket_resolves_mor_generations_in_one_rewrite(spark, tmp_dir):
     new_dirs = set(os.listdir(os.path.join(t.path, "data"))) - dirs
     assert len(new_dirs) == 1, new_dirs
     assert fresh.manifest["last_rebucket_version"] == v + 1
-    # the one spec-evolution path, composed: start, one migrate round,
-    # then compact() has only the flag to clear
+    # the one spec-evolution path, composed: start, one migrate round
     ops = [MicroLakeTable.load(spark, t.path, v + i).manifest["commit_op"]
-           for i in (1, 2, 3)]
-    assert ops == [["rebucket-start", 8], ["migrate"], ["compact-clear"]]
-    assert fresh.manifest["version"] == v + 3
+           for i in (1, 2)]
+    assert ops == [["rebucket-start", 8], ["migrate"]]
+    assert fresh.manifest["version"] == v + 2
     _assert_resolved(fresh, before)

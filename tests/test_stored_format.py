@@ -1,16 +1,21 @@
 """The stored-row format: every data-file writer stores the delete
 marker ``_deleted`` as TRUE on tombstones and NULL on live rows, with
-no second marker column, and files in the older encoding (FALSE on live
-rows plus a ``_del1`` 1-or-NULL column) still read the same."""
+no second marker column, and at most one row per key in each file (the
+invariant that lets reads decide from the file list alone whether to
+resolve LWW). Files in the older encoding (FALSE on live rows plus a
+``_del1`` 1-or-NULL column) still read the same."""
 
 from __future__ import annotations
 
 import os
 from datetime import datetime, timezone
+from functools import reduce
 
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from tap_github_search_spark.schema import CHANGE_EVENT_SCHEMA
 from tap_github_search_spark.table.microlake import MicroLakeTable
@@ -80,7 +85,8 @@ def test_every_writer_stores_true_or_null_marker(spark, tmp_dir):
     """Stage, CoW rewrite, compact, migrate_step and from_snapshot each
     write exactly the payload plus ``_seq`` and ``_deleted``, with
     ``_deleted`` NULL on every live row and TRUE on every tombstone, so
-    a footer's ``_deleted`` null count is the file's live row count."""
+    a footer's ``_deleted`` null count is the file's live row count;
+    and no file holds a key twice."""
     cow = MicroLakeTable.create(
         spark, f"{tmp_dir}/cow",
         spark.createDataFrame([], CHANGE_EVENT_SCHEMA).drop("op", "seq")
@@ -117,6 +123,9 @@ def test_every_writer_stores_true_or_null_marker(spark, tmp_dir):
                     marker = pf.read(columns=["_deleted"]).column(0)
                     assert pc.sum(pc.equal(marker, False)).as_py() in (
                         None, 0), (d, fn)
+                    keys = pf.read(columns=["conv_id", "turn_idx"])
+                    assert len(set(zip(*keys.to_pydict().values()))) \
+                        == keys.num_rows, (d, fn)
         # the committed files: TRUE exactly on the oracle's tombstones,
         # NULL exactly on its live rows, and the manifest's footer-read
         # live count agrees with the data
@@ -195,5 +204,81 @@ def test_old_encoding_files_read_identically(spark, tmp_dir):
     assert set(expected.values()) == {"insert", "update", "delete"}
 
     assert t.compact() > 0
-    assert not t.manifest.get("read_dedup")
+    assert not t.stats()["read_dedup"]
     assert _snap(t.snapshot_df()) == after
+
+
+E3 = [
+    (60, "U", "c1", 1, 400), (61, "D", "c2", 0, 401),
+    (62, "I", "c11", 1, 402), (63, "U", "c10", 0, 403),
+]
+
+
+def _rows(df) -> list:
+    """(key, text) rows, sorted — a list, so a duplicate key shows."""
+    return sorted((r["conv_id"], r["turn_idx"], r["text"])
+                  for r in df.collect())
+
+
+def test_resolve_rule_holds_through_every_writer(spark, tmp_dir):
+    """MOR merges, a bounded then a full compact, a spec switch, migrate
+    rounds with a merge between them, a CoW merge and a final compact:
+    after every step the full read and the bucket-pruned reads (each
+    deciding the resolve on the files it reads) equal the LWW oracle,
+    and whenever ``stats()`` says a full read needs no resolve the
+    stored rows really hold one row per key."""
+    t = MicroLakeTable.create(
+        spark, f"{tmp_dir}/t",
+        spark.createDataFrame([], CHANGE_EVENT_SCHEMA).drop("op", "seq")
+        .schema, n_buckets=4,
+    )
+    applied: list = []
+
+    def check(step: str) -> None:
+        want = sorted((*k, text)
+                      for k, text in _live(_oracle(*applied)).items())
+        assert _rows(t.snapshot_df()) == want, step
+        n = t.n_buckets
+        pruned = reduce(DataFrame.unionByName, [
+            t.snapshot_df(buckets=[b])
+            .filter(F.pmod(F.hash("conv_id"), F.lit(n)) == b)
+            for b in range(n)
+        ])
+        assert _rows(pruned) == want, step
+        if not t.stats()["read_dedup"]:
+            dup = t.raw_df().groupBy("conv_id", "turn_idx").count() \
+                .filter("count > 1").count()
+            assert dup == 0, step
+
+    def merge(rows, mode):
+        t.merge(_events(spark, rows), len(applied), merge_mode=mode)
+        applied.append(rows)
+        check(f"{mode} merge {len(applied) - 1}")
+
+    merge(E0, "mor")
+    merge(E1, "mor")
+    assert t.stats()["read_dedup"]
+    assert t.compact(max_buckets=1) == 1
+    check("compact(max_buckets=1)")
+    assert t.compact() > 0
+    check("compact()")
+    assert not t.stats()["read_dedup"]
+    t.rebucket_start(8)
+    assert t.stats()["migration_pending"] and t.stats()["read_dedup"]
+    check("rebucket_start")
+    assert t.migrate_step(max_buckets=1) > 0
+    check("migrate_step 1")
+    merge(E2, "cow")                      # forced MOR: migration pending
+    rounds = 1
+    while t.migrate_step(max_buckets=1):
+        rounds += 1
+        check(f"migrate_step {rounds}")
+    check("migration complete")
+    assert not t.stats()["migration_pending"]
+    merge(E3, "cow")
+    assert t.compact() > 0
+    check("final compact()")
+    assert not t.stats()["read_dedup"]
+    assert t.stats()["max_generations"] == 1
+    hist = [h["read_dedup"] for h in t.history()]
+    assert any(hist) and hist[-1] is False
