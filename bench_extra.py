@@ -20,8 +20,16 @@ Modes:
   --queries-noop  per-query isolation of the headline suite through
                   the noop sink (guide §1.4) at $SPARK_GRAFT_SF_DIR —
                   times the computation, not the sink.
+  --python-task-cost
+                  the fixed cost of one task of a stage that runs a
+                  Python UDF: a noop write of 64 rows through
+                  `normalize_text` after a shuffle into 1 partition,
+                  then into 16 (all rows in one, 15 empty). The extra
+                  wall time over the extra waves of tasks is the
+                  per-task cost — what sizing the merge's `_cluster`
+                  shuffle to the cores saves per epoch.
 
-Both honor $SPARK_GRAFT_CPUS / $SPARK_GRAFT_SF_DIR like bench.py.
+All honor $SPARK_GRAFT_CPUS / $SPARK_GRAFT_SF_DIR like bench.py.
 """
 
 from __future__ import annotations
@@ -145,13 +153,50 @@ def queries_noop(spark, sf_dir: str) -> dict:
             "queries": out}
 
 
+def python_task_cost(spark, cpus: int) -> dict:
+    from pyspark.sql import functions as F
+
+    from tap_github_search_spark.functions.normalize import normalize_text
+
+    rows = spark.range(64).select(
+        F.concat(F.lit("t"), F.col("id").cast("string")).alias("text"))
+
+    def best(n_parts: int) -> float:
+        # repartition(n, lit) puts every row in one partition; AQE never
+        # coalesces a REPARTITION_BY_NUM shuffle, so n tasks run
+        df = rows.repartition(n_parts, F.lit(0)).select(
+            normalize_text("text").alias("text"))
+        times = []
+        for _ in range(4):                  # first run warms the workers
+            t0 = time.monotonic()
+            df.write.format("noop").mode("overwrite").save()
+            times.append(time.monotonic() - t0)
+        return min(times[1:])
+
+    one, many = best(1), best(16)
+    extra_waves = -(-16 // cpus) - 1
+    return {
+        "metric": "python_task_cost",
+        "one_partition_s": round(one, 3),
+        "partitions_16_s": round(many, 3),
+        "extra_waves": extra_waves,
+        # None when every task fits one wave: the cost then hides in
+        # CPU time, not wall time
+        "per_task_s": (round((many - one) / extra_waves, 3)
+                       if extra_waves else None),
+        "cpus": cpus,
+    }
+
+
 def main() -> None:
     from tap_github_search_spark.session import get_spark
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(cores=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    if "--queries-noop" in sys.argv:
+    if "--python-task-cost" in sys.argv:
+        print(json.dumps(python_task_cost(spark, cpus)))
+    elif "--queries-noop" in sys.argv:
         sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR",
                                 "/root/testdata/sf0.1")
         print(json.dumps(queries_noop(spark, sf_dir)))

@@ -52,6 +52,7 @@ import os
 import re
 import time
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -70,6 +71,14 @@ def _tombstone(is_delete: Column) -> Column:
     """The stored delete marker: ``_deleted`` TRUE on a tombstone,
     NULL on a live row — the one encoding every data-file writer uses."""
     return F.when(is_delete, F.lit(True)).alias("_deleted")
+
+
+def cluster_width(n_buckets: int, parallelism: int) -> int:
+    """The ``_cluster`` shuffle width: the smallest divisor of
+    ``n_buckets`` that is at least ``min(n_buckets, parallelism)`` —
+    4 for 16 buckets on 4 cores, 8 for 64 on 8, 7 for 7 on 4."""
+    floor = min(n_buckets, max(1, parallelism))
+    return next(k for k in range(floor, n_buckets + 1) if n_buckets % k == 0)
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -221,7 +230,7 @@ class MicroLakeTable:
             F.lit(int(as_of_seq)).cast("long").alias("_seq"),
             _tombstone(F.lit(False)),
         ).withColumn("_bucket", table._bucket_expr(keys[0]))
-        store = table._cluster(store)  # one writer task per bucket
+        store = table._cluster(store)  # each bucket whole in one task
         dirname = f"bootstrap-{uuid.uuid4().hex[:8]}"
         table._write(store).parquet(os.path.join(path, "data", dirname))
         files = table._list_epoch_files(dirname)
@@ -258,15 +267,42 @@ class MicroLakeTable:
 
     def _bucket_expr(self, col: str):
         """bucket(N, conv_id) — deliberately Murmur3 (`F.hash`), the same
-        function `repartition(N, col)` uses, so one repartition both
-        clusters keys for dedup AND aligns rows to their bucket: every
-        task writes exactly one bucket directory, no second shuffle."""
+        function `repartition(k, col)` uses, so one repartition both
+        clusters keys for dedup AND aligns rows to their bucket: with
+        ``k`` dividing N (``_cluster``) every bucket lands whole in one
+        task, so each task writes one file per bucket it holds and no
+        second shuffle is needed."""
         return F.pmod(F.hash(F.col(col)), F.lit(self.n_buckets)).cast("int")
 
     def _cluster(self, df: DataFrame) -> DataFrame:
-        """One shuffle that serves the whole merge: hash-cluster on the
-        first key into n_buckets partitions (partition id == bucket id)."""
-        return df.repartition(self.n_buckets, self.keys[0])
+        """One shuffle that serves the whole write: hash-cluster on the
+        first key into ``k = cluster_width(n_buckets, cores)`` partitions,
+        the smallest divisor of ``n_buckets`` that is at least
+        ``min(n_buckets, defaultParallelism)``.
+
+        ``k`` must divide ``n_buckets``: then ``pmod(hash, k)`` is
+        ``pmod(bucket, k)``, a function of the bucket id, so every bucket
+        lands whole in one task and ``partitionBy("_bucket")`` still
+        writes one file per touched bucket. ``k >= min(n_buckets,
+        cores)`` keeps every core busy; the smallest such divisor keeps
+        the task count, and the fixed cost per task, as low as the rule
+        allows. Each task of a stage that runs a Python UDF (the merge's
+        Arrow normalize) pays a fixed worker setup (~0.28 s on a 4-vCPU
+        box, even for an empty partition), so 16 buckets on 4 cores ran
+        4 waves of mostly empty tasks. When the input is already
+        hash-partitioned on the key into ``k`` partitions (a derived
+        level's aggregate, with ``k`` equal to the shuffle partitions),
+        Spark drops this repartition as redundant.
+
+        Rejected, all measured: ``coalesce()`` after the window
+        (``CoalescedRDD`` still runs one Python runner per parent
+        partition: 4 tasks of ~1.3 s, no gain); AQE partition coalescing
+        (it never coalesces a ``REPARTITION_BY_NUM`` shuffle);
+        normalizing before the shuffle (breaks ``winner_transform``'s
+        winners-only contract)."""
+        k = cluster_width(self.n_buckets,
+                          self.spark.sparkContext.defaultParallelism)
+        return df.repartition(k, self.keys[0])
 
     def _cluster_sorted(self, df: DataFrame) -> DataFrame:
         """Key-clustered file layout as an explicit WRITE INVARIANT:
@@ -665,16 +701,20 @@ class MicroLakeTable:
         base_accept, rule_fail = self._merge_guards(
             batch_df, max_payload_bytes, expectations
         )
-        evolved, commit_tag, staged_files, counts = self._merge_stage(
-            batch_df, epoch, base_accept, rule_fail, winner_transform, dedup
-        )
+        with self._job_label(epoch, "stage"):
+            evolved, commit_tag, staged_files, counts = self._merge_stage(
+                batch_df, epoch, base_accept, rule_fail, winner_transform,
+                dedup,
+            )
         if quarantine_dir and counts["events_quarantined"]:
-            self._merge_quarantine(batch_df, epoch, base_accept, rule_fail,
-                                   quarantine_dir)
+            with self._job_label(epoch, "quarantine"):
+                self._merge_quarantine(batch_df, epoch, base_accept,
+                                       rule_fail, quarantine_dir)
         lin_rows = self._merge_lineage(staged_files)
-        files = self._merge_rewrite_or_append(
-            epoch, commit_tag, staged_files, evolved, merge_mode
-        )
+        with self._job_label(epoch, "rewrite"):
+            files = self._merge_rewrite_or_append(
+                epoch, commit_tag, staged_files, evolved, merge_mode
+            )
 
         events_in = counts["events_in"]
         rows_applied = sum(r["rows_applied"] for r in lin_rows)
@@ -708,6 +748,21 @@ class MicroLakeTable:
             lineage=lineage,
             events_quarantined=counts["events_quarantined"],
         )
+
+    @contextmanager
+    def _job_label(self, epoch: int, phase: str):
+        """Label the Spark jobs of one merge phase
+        ``"<table dir>/e<epoch>/<phase>"`` (the Spark UI and event log
+        then attribute their cost), then restore the caller's
+        description — Structured Streaming sets its own per batch. The
+        job group is left alone: the streaming query cancels by it."""
+        sc = self.spark.sparkContext
+        caller = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"{self.path}/e{epoch}/{phase}")
+        try:
+            yield
+        finally:
+            sc.setJobDescription(caller)
 
     def _merge_guards(self, batch_df: DataFrame,
                       max_payload_bytes: int | None,
@@ -743,8 +798,8 @@ class MicroLakeTable:
         staged straight to parquet. The `_cluster` repartition is the
         ONLY shuffle: the window dedup reuses its clustering (Catalyst
         elides the Exchange and pushes a WindowGroupLimit rank-limit
-        into the sort), and bucket == partition id, so `partitionBy`
-        writes one bucket directory per task. All counts ride one
+        into the sort), and each bucket lands whole in one task, so
+        `partitionBy` writes one file per touched bucket. All counts ride one
         Observation on the write — the WAL batch is scanned once. The
         delete marker is ``_tombstone``'s TRUE-or-NULL ``_deleted``, so
         the staged footers carry each file's live row count
@@ -909,10 +964,10 @@ class MicroLakeTable:
         ``migrate_step``: read ``files`` under ``schema`` (default: the
         table schema), resolve LWW across their generations, optionally
         drop tombstones, and write the result under the CURRENT spec to
-        ``data/<dirname>`` in one shuffle — ``_cluster`` makes partition
-        id == bucket id, the LWW window reuses that clustering, and each
-        task writes one bucket file holding at most one row per key (the
-        invariant ``_needs_resolve`` relies on). Resolving inside
+        ``data/<dirname>`` in one shuffle — ``_cluster`` puts each bucket
+        whole in one task, the LWW window reuses that clustering, and
+        each touched bucket gets one file holding at most one row per
+        key (the invariant ``_needs_resolve`` relies on). Resolving inside
         ``files`` is sound whenever they hold every generation of their
         keys the reader would otherwise see together (a whole bucket, or
         a whole old-spec bucket group); generations left outside share a

@@ -363,6 +363,44 @@ def test_merge_max_payload_bytes_rejects_and_counts(spark, tmp_dir):
     assert m["events_rejected"] == 1
 
 
+def test_merge_labels_its_jobs_by_phase(spark, tmp_dir, monkeypatch):
+    """Each merge phase's Spark jobs carry the description
+    ``<table dir>/e<epoch>/<phase>`` (stage, quarantine, rewrite), and
+    the caller's description — Structured Streaming sets one per batch
+    — is back in place once the merge returns."""
+    sc = spark.sparkContext
+    labels: list[str] = []
+    write, quarantine = (MicroLakeTable._write,
+                         MicroLakeTable._merge_quarantine)
+
+    def write_spy(self, df):
+        labels.append(sc.getLocalProperty("spark.job.description"))
+        return write(self, df)
+
+    def quarantine_spy(self, *args):
+        labels.append(sc.getLocalProperty("spark.job.description"))
+        return quarantine(self, *args)
+
+    monkeypatch.setattr(MicroLakeTable, "_write", write_spy)
+    monkeypatch.setattr(MicroLakeTable, "_merge_quarantine", quarantine_spy)
+    path = f"{tmp_dir}/t"
+    batch = _events(spark, [(1, "I", "c1", 0, 10), (2, "I", "c2", 0, 11)])
+    t = MicroLakeTable.create(spark, path, batch.drop("op", "seq").schema,
+                              n_buckets=4)
+    sc.setJobDescription("caller batch")
+    try:
+        t.merge(batch, 0)
+        t.merge(_events(spark, [(3, "U", "c1", 0, 12),
+                                (4, "I", "c3", 0, 13, "bad")]), 1,
+                expectations={"no_bad": "text <> 'bad'"},
+                quarantine_dir=f"{tmp_dir}/q")
+        assert sc.getLocalProperty("spark.job.description") == "caller batch"
+    finally:
+        sc.setJobDescription(None)
+    assert labels == [f"{path}/e0/stage", f"{path}/e1/stage",
+                      f"{path}/e1/quarantine", f"{path}/e1/rewrite"]
+
+
 def test_metrics_df_backfills_pre_evolution_manifests(spark, tmp_dir):
     """Manifests committed before METRICS_SCHEMA gained events_rejected
     must still load (ADVICE r1: immutable old manifests lack the key)."""

@@ -133,8 +133,8 @@ def test_search_counts_single_scan(spark):
 def test_merge_and_rewrite_plan_one_shuffle(spark, tmp_dir, monkeypatch):
     """The merge stage and the one rewrite body (CoW overlap rewrite,
     ``compact``) each plan exactly ONE Exchange — the ``_cluster``
-    repartition — and the LWW window reuses its clustering (no second
-    Exchange). The stage keeps the shape of
+    repartition, ``cluster_width`` partitions wide — and the LWW window
+    reuses its clustering (no second Exchange). The stage keeps the shape of
     plans/r06/merge_replay_store_after.txt: Exchange → Sort →
     WindowGroupLimit → Window."""
     plans: list[str] = []
@@ -154,28 +154,33 @@ def test_merge_and_rewrite_plan_one_shuffle(spark, tmp_dir, monkeypatch):
             CHANGE_EVENT_SCHEMA,
         )
 
-    t = MicroLakeTable.create(
-        spark, f"{tmp_dir}/t",
-        spark.createDataFrame([], CHANGE_EVENT_SCHEMA).drop("op", "seq")
-        .schema, n_buckets=4,
-    )
-    t.merge(events(0, "I"), 0, winner_transform=normalize_events)
-    assert len(plans) == 1                   # empty table: stage only
-    t.merge(events(100, "U"), 1)             # CoW: stage + rewrite
-    assert len(plans) == 3
-    t.merge(events(200, "D"), 2, merge_mode="mor")
-    assert t.compact() > 0                   # MOR append + compact
-    assert len(plans) == 5
-    stage, rewrite, compact = plans[0], plans[2], plans[4]
+    # 4 buckets on the session's 8 cores shuffle into 4 partitions; 16
+    # buckets into 8, the smallest divisor of 16 that fills the cores
+    assert spark.sparkContext.defaultParallelism == 8
+    for n_buckets, width in ((4, 4), (16, 8)):
+        plans.clear()
+        t = MicroLakeTable.create(
+            spark, f"{tmp_dir}/t{n_buckets}",
+            spark.createDataFrame([], CHANGE_EVENT_SCHEMA).drop("op", "seq")
+            .schema, n_buckets=n_buckets,
+        )
+        t.merge(events(0, "I"), 0, winner_transform=normalize_events)
+        assert len(plans) == 1                   # empty table: stage only
+        t.merge(events(100, "U"), 1)             # CoW: stage + rewrite
+        assert len(plans) == 3
+        t.merge(events(200, "D"), 2, merge_mode="mor")
+        assert t.compact() > 0                   # MOR append + compact
+        assert len(plans) == 5
+        stage, rewrite, compact = plans[0], plans[2], plans[4]
 
-    shape = ["Exchange", "Sort", "WindowGroupLimit", "Window"]
-    for plan, top in ((stage, ["ArrowEvalPython"]), (rewrite, []),
-                      (compact, [])):
-        tree, details = plan.split("\n\n", 1)
-        assert tree.count("Exchange") == 1   # the _cluster shuffle only
-        args = details.split(") Exchange\n", 1)[1].splitlines()[1]
-        assert "hashpartitioning(conv_id#" in args
-        assert ", 4), REPARTITION_BY_NUM" in args
-        # bottom-up: the window sorts and limits inside that clustering
-        pos = [tree.find(f"+- {op} (") for op in shape + top]
-        assert min(pos) >= 0 and pos == sorted(pos, reverse=True), tree
+        shape = ["Exchange", "Sort", "WindowGroupLimit", "Window"]
+        for plan, top in ((stage, ["ArrowEvalPython"]), (rewrite, []),
+                          (compact, [])):
+            tree, details = plan.split("\n\n", 1)
+            assert tree.count("Exchange") == 1   # the _cluster shuffle only
+            args = details.split(") Exchange\n", 1)[1].splitlines()[1]
+            assert "hashpartitioning(conv_id#" in args
+            assert f", {width}), REPARTITION_BY_NUM" in args
+            # bottom-up: the window sorts and limits inside that clustering
+            pos = [tree.find(f"+- {op} (") for op in shape + top]
+            assert min(pos) >= 0 and pos == sorted(pos, reverse=True), tree

@@ -14,11 +14,15 @@ from functools import reduce
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tap_github_search_spark.schema import CHANGE_EVENT_SCHEMA
-from tap_github_search_spark.table.microlake import MicroLakeTable
+from tap_github_search_spark.table.microlake import (
+    MicroLakeTable,
+    cluster_width,
+)
 
 PAYLOAD = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
@@ -282,3 +286,105 @@ def test_resolve_rule_holds_through_every_writer(spark, tmp_dir):
     assert t.stats()["max_generations"] == 1
     hist = [h["read_dedup"] for h in t.history()]
     assert any(hist) and hist[-1] is False
+
+
+@pytest.mark.parametrize("n,cores", [
+    (1, 4), (1, 1), (4, 8), (7, 4), (13, 4), (16, 4), (16, 8), (16, 1),
+    (12, 5), (32, 8), (64, 8), (64, 32), (100, 7), (4096, 32),
+])
+def test_cluster_width_divides_buckets_and_fills_cores(n, cores):
+    """The ``_cluster`` shuffle width divides the bucket count (so a
+    bucket never spans two tasks) and is at least ``min(n, cores)``
+    wide (so no write stage loses parallelism)."""
+    k = cluster_width(n, cores)
+    assert n % k == 0
+    assert min(n, cores) <= k <= n
+
+
+# 48 conversations with two turns, then updates, deletes and a late
+# update that loses to its key's delete — enough keys to touch most of
+# 16 and 32 buckets, so every ``_cluster`` task holds several buckets
+W0 = [(i, "I", f"c{i // 2}", i % 2, 100 + i) for i in range(96)]
+W1 = [(200 + i, "U", f"c{i}", 0, 300 + i) for i in range(0, 48, 3)] + [
+    (260 + i, "D", f"c{i}", 1, 360 + i) for i in range(1, 48, 5)
+]
+W2 = [(400 + i, "U", f"c{i}", 1, 500 + i) for i in range(0, 48, 4)] + [
+    (450, "U", "c1", 1, 359),                 # older than c1/1's delete
+    (451, "I", "c100", 0, 600), (452, "D", "c2", 0, 601),
+]
+
+
+def _check_layout(spark, table: MicroLakeTable, dirname: str) -> None:
+    """One data file per touched bucket dir of ``dirname`` and every row
+    in the bucket its key hashes to."""
+    root = os.path.join(table.path, "data", dirname)
+    bdirs = [d for d in os.listdir(root) if d.startswith("_bucket=")]
+    assert bdirs, dirname
+    for d in bdirs:
+        files = [f for f in os.listdir(os.path.join(root, d))
+                 if f.endswith(".parquet")]
+        assert len(files) == 1, (dirname, d, files)
+    n = table.n_buckets
+    misplaced = spark.read.parquet(root).filter(
+        F.pmod(F.hash("conv_id"), F.lit(n)) != F.col("_bucket")
+    ).count()
+    assert misplaced == 0, dirname
+
+
+def _check_snapshot(table: MicroLakeTable, applied: list) -> None:
+    want = sorted((*k, text) for k, text in _live(_oracle(*applied)).items())
+    assert _rows(table.snapshot_df()) == want
+
+
+def _data_dirs(table: MicroLakeTable) -> set:
+    data = os.path.join(table.path, "data")
+    return set(os.listdir(data)) if os.path.isdir(data) else set()
+
+
+@pytest.mark.parametrize("n_buckets", [16, 32])
+def test_every_writer_keeps_one_file_per_bucket(spark, tmp_dir, n_buckets):
+    """With more buckets than ``_cluster`` tasks (8 cores here), each
+    writer — the stage, the CoW rewrite, ``compact``, ``migrate_step``
+    and ``from_snapshot`` — still writes one file per touched bucket,
+    every row sits in its key's bucket, and reads equal the oracle."""
+    assert cluster_width(n_buckets,
+                         spark.sparkContext.defaultParallelism) < n_buckets
+    t = MicroLakeTable.create(
+        spark, f"{tmp_dir}/t",
+        spark.createDataFrame([], CHANGE_EVENT_SCHEMA).drop("op", "seq")
+        .schema, n_buckets=n_buckets,
+    )
+    applied: list = []
+    seen = set()
+
+    def step(fn) -> None:
+        before = _data_dirs(t)
+        fn()
+        new = _data_dirs(t) - before
+        assert new
+        for d in sorted(new):
+            seen.add(_writer(d))
+            _check_layout(spark, t, d)
+        _check_snapshot(t, applied)
+
+    def merge(rows, mode):
+        applied.append(rows)
+        t.merge(_events(spark, rows), len(applied) - 1, merge_mode=mode)
+
+    step(lambda: merge(W0, "cow"))            # stage into an empty table
+    step(lambda: merge(W1, "cow"))            # stage + CoW rewrite
+    step(lambda: merge(W2, "mor"))
+    step(lambda: t.compact())
+    t.rebucket_start(n_buckets * 3 // 2)
+    step(lambda: t.migrate_step())
+    assert not t.migration_pending
+    assert seen == {"stage", "rw", "compact", "migrate"}
+
+    boot = MicroLakeTable.from_snapshot(
+        spark, f"{tmp_dir}/boot", t.snapshot_df(), as_of_seq=999,
+        n_buckets=n_buckets,
+    )
+    (d,) = os.listdir(os.path.join(boot.path, "data"))
+    assert _writer(d) == "bootstrap"
+    _check_layout(spark, boot, d)
+    _check_snapshot(boot, applied)
