@@ -52,13 +52,20 @@ import os
 import sys
 
 REQUIRED_CONFIG_KEYS = {"mode", "log_dirs", "table"}
-VALID_CONFIG_KEYS = REQUIRED_CONFIG_KEYS | {
-    "checkpoint", "buckets", "merge_mode", "dedup", "rollup_path",
-    "daily_rollup_path", "compact_every", "optimize_every",
-    "optimize_opts", "text_index_path", "lsh_index_path",
-    "join_view_path", "dim_path", "scd2_path", "max_payload_bytes",
-    "expectations", "quarantine_dir",
-    "stream_map", "epochs", "follow", "cores", "wap_audit",
+#: job options only a config sets (no CLI flag), with their defaults:
+#: ``main`` puts each on the parsed args, from the config in ``run``
+#: mode and as the default in every other mode
+CONFIG_OPTIONS = {
+    "merge_mode": "cow", "dedup": "window", "rollup_path": None,
+    "daily_rollup_path": None, "compact_every": None,
+    "optimize_every": None, "optimize_opts": None,
+    "text_index_path": None, "lsh_index_path": None,
+    "join_view_path": None, "dim_path": None, "scd2_path": None,
+    "max_payload_bytes": None, "expectations": None,
+    "quarantine_dir": None, "stream_map": None, "wap_audit": None,
+}
+VALID_CONFIG_KEYS = REQUIRED_CONFIG_KEYS | set(CONFIG_OPTIONS) | {
+    "checkpoint", "buckets", "epochs", "follow", "cores",
 }
 
 
@@ -349,38 +356,10 @@ def main(argv: list[str] | None = None) -> int:
         if cfg.get("cores"):
             argv2 += ["--cores", str(cfg["cores"])]
         args = _parser().parse_args(argv2)
-        args.merge_mode = cfg.get("merge_mode", "cow")
-        args.dedup = cfg.get("dedup", "window")
-        args.rollup_path = cfg.get("rollup_path")
-        args.daily_rollup_path = cfg.get("daily_rollup_path")
-        args.compact_every = cfg.get("compact_every")
-        args.optimize_every = cfg.get("optimize_every")
-        args.optimize_opts = cfg.get("optimize_opts")
-        args.text_index_path = cfg.get("text_index_path")
-        args.lsh_index_path = cfg.get("lsh_index_path")
-        args.join_view_path = cfg.get("join_view_path")
-        args.dim_path = cfg.get("dim_path")
-        args.scd2_path = cfg.get("scd2_path")
-        args.expectations = cfg.get("expectations")
-        args.quarantine_dir = cfg.get("quarantine_dir")
-        args.max_payload_bytes = cfg.get("max_payload_bytes")
-        args.stream_map = cfg.get("stream_map")
-        args.wap_audit = cfg.get("wap_audit")
     else:
-        args.merge_mode, args.dedup, args.rollup_path = "cow", "window", None
-        args.daily_rollup_path = None
-        args.compact_every = None
-        args.optimize_every = None
-        args.optimize_opts = None
-        args.text_index_path = None
-        args.lsh_index_path = None
-        args.join_view_path = None
-        args.dim_path = None
-        args.scd2_path = None
-        args.expectations = None
-        args.quarantine_dir = None
-        args.max_payload_bytes = None
-        args.stream_map = None
+        cfg = {}
+    for key, default in CONFIG_OPTIONS.items():
+        setattr(args, key, cfg.get(key, default))
 
     from .session import get_spark
 
@@ -598,7 +577,9 @@ def main(argv: list[str] | None = None) -> int:
             n_buckets=args.buckets, n_epochs=args.epochs,
             merge_mode=args.merge_mode, dedup=args.dedup,
             max_payload_bytes=args.max_payload_bytes,
-            stream_map=args.stream_map,
+            expectations=args.expectations,
+            quarantine_dir=args.quarantine_dir,
+            stream_map=args.stream_map, wap_audit=args.wap_audit,
         )
         for r in results:
             print(json.dumps({
@@ -630,8 +611,7 @@ def main(argv: list[str] | None = None) -> int:
         quarantine_dir=args.quarantine_dir,
         max_payload_bytes=args.max_payload_bytes,
         stream_map=args.stream_map,
-        wap_audit=(getattr(args, "wap_audit", None)
-                   or _parse_audit(getattr(args, "audit", None))),
+        wap_audit=args.wap_audit or _parse_audit(args.audit),
     )
     print(json.dumps({
         "last_committed_epoch": table.last_committed_epoch,

@@ -143,7 +143,7 @@ class LevelSpec:
     attached, and must return one row per key. ``key_expr`` maps a
     parent-level row to this level's key; ``None`` only for level 1,
     whose key IS the parent table's merge key (affected keys then come
-    straight from the epoch's staged files)."""
+    straight from the epoch's change set, ``main.staged_keys``)."""
 
     name: str
     schema: T.StructType
@@ -184,104 +184,6 @@ WEEKLY_LEVEL = LevelSpec(
     key_expr=_week_col,
     n_buckets=4,
 )
-
-
-def staged_root_keys(spark: SparkSession, main: MicroLakeTable,
-                     epoch: int, behind: list[str]) -> DataFrame:
-    """Distinct merge keys (``main.keys[0]``) staged in the given epoch
-    — a skinny scan of that epoch's staged winner files only (stage
-    dirs carry a writer-unique tag: ``epoch=N-<tag>``; rewrite/compact
-    dirs have further suffixes and are excluded). Shared by every
-    derived maintainer (chains and the join view).
-
-    TOTAL by design: an epoch with nothing staged (empty batch, or
-    an old redelivered epoch whose stage was vacuumed after every
-    dependent table committed it) yields an EMPTY key frame, so the
-    caller advances its fence with an empty merge instead of erroring
-    out of catch-up. The chaos soak found the alternative failure
-    mode: a swallowed catch-up error let the streaming checkpoint
-    commit with a deep level permanently behind — a liveness hole,
-    since that batch is never redelivered. Genuine read failures on
-    existing staged files still raise (the batch fails and Structured
-    Streaming redelivers = retry).
-
-    ``behind``: paths of dependent tables that still NEED this epoch —
-    when the stage dir is gone but the main table's lineage proves the
-    epoch staged data (maintenance outran the dependents), this raises
-    instead of silently dropping the epoch's changes (ADVICE r4)."""
-    data = os.path.join(main.path, "data")
-    prefix = f"epoch={epoch}-"
-    dirs = [
-        os.path.join(data, d)
-        for d in os.listdir(data)
-        if d.startswith(prefix) and "." not in d[len(prefix):]
-    ]
-
-    def _has_bucket_parquet(d: str) -> bool:
-        # staged rows always land under _bucket=K/ subdirs; an
-        # EMPTY staged epoch can leave a zero-row part file at the
-        # dir ROOT (no partition subdir), whose flat layout
-        # conflicts with the partitioned siblings at read time
-        # (CONFLICTING_DIRECTORY_STRUCTURES) — and contributes no
-        # keys anyway, so it is skipped along with empty dirs
-        for sub in os.listdir(d):
-            p = os.path.join(d, sub)
-            if (sub.startswith("_bucket=") and os.path.isdir(p)
-                    and any(x.endswith(".parquet")
-                            for x in os.listdir(p))):
-                return True
-        return False
-
-    dirs = [d for d in dirs if _has_bucket_parquet(d)]
-    # always the MAIN table's merge key: a level-1 spec may key on a
-    # DERIVED expression (key_expr), which staged files don't carry
-    key = main.keys[0]
-    if not dirs:
-        # "no stage dir" is only benign when the epoch genuinely
-        # staged nothing OR every dependent already committed it. If
-        # one still NEEDS this epoch, consult the main table's lineage
-        # (one row per bucket touched per merge epoch — empty merges
-        # record none): rows for this epoch mean data WAS staged and
-        # the stage dir has since been compacted/vacuumed — silently
-        # advancing the fence would drop the epoch's changes from that
-        # dependent forever. The 'vacuumed only after every level
-        # committed' precondition is enforced here, not assumed.
-        if behind:
-            lineage_fence = int(main.manifest.get(
-                "lineage_complete_after_epoch", -1))
-            if epoch <= lineage_fence:
-                raise RuntimeError(
-                    f"derived level(s) {behind} need epoch {epoch} "
-                    "but its stage dir is gone and the main "
-                    "table's lineage for it was expired "
-                    f"(complete only after epoch {lineage_fence}) "
-                    "— cannot prove the epoch staged nothing; "
-                    "rebuild the level or raise metadata retention"
-                )
-            staged = any(
-                ln["commit_epoch"] == epoch
-                for ln in main._lineage_entries(after_epoch=epoch - 1)
-            )
-            if staged:
-                raise RuntimeError(
-                    f"derived level(s) {behind} need epoch {epoch}: "
-                    "the main table's lineage shows the epoch "
-                    "staged data, but its stage dir has been "
-                    "compacted/vacuumed before every level "
-                    "committed it — maintenance outran the chain; "
-                    "rebuild the level or raise vacuum grace"
-                )
-        kf = next(f for f in main.schema.fields if f.name == key)
-        return spark.createDataFrame([], T.StructType([kf]))
-    # basePath pins partition discovery to the data root: with TWO
-    # stage dirs for one epoch (a CAS-losing writer's orphan next
-    # to the winner's), Spark would otherwise treat the
-    # ``epoch=N-tag`` dir names themselves as conflicting
-    # partition directories (CONFLICTING_DIRECTORY_STRUCTURES)
-    return (
-        spark.read.option("basePath", data).parquet(*dirs)
-        .select(key).distinct()
-    )
 
 
 #: largest key frame ``maybe_broadcast`` hints as a broadcast (0: never)
@@ -367,20 +269,23 @@ def epoch_events(upserts: DataFrame, gone: DataFrame, epoch: int,
 
 class EpochContext:
     """Per-epoch frames shared across every maintainer of one main
-    table (r06, VERDICT r5 #2): the staged root-key frame, its bucket
-    ids, and the main table's live rows for those keys are computed
-    and PERSISTED once per epoch instead of once per maintainer
-    family. Before this, each of the three level-1 transforms
-    (conv_rollup, conv_tokens, conv_signature) independently re-ran
-    ``main.snapshot_df()`` — a full MOR-resolved parent scan — per
-    epoch, and each level's un-persisted affected frame was
-    re-evaluated by the broadcast probe, the level join, the ``gone``
-    anti-join and the merge. ``release()`` unpersists everything."""
+    table (r06, VERDICT r5 #2): the root-key frame (the epoch's change
+    set, ``main.staged_keys``), its bucket ids, and the main table's
+    live rows for those keys are computed and PERSISTED once per epoch
+    instead of once per maintainer family. Before this, each of the
+    three level-1 transforms (conv_rollup, conv_tokens,
+    conv_signature) independently re-ran ``main.snapshot_df()`` — a
+    full MOR-resolved parent scan — per epoch, and each level's
+    un-persisted affected frame was re-evaluated by the broadcast
+    probe, the level join, the ``gone`` anti-join and the merge.
+
+    Frames are built on first use, and ``staged_keys`` raises when the
+    epoch's change set is gone: only touch ``root_keys`` for an epoch
+    some table still needs. ``release()`` unpersists everything."""
 
     def __init__(self, spark: SparkSession, main: MicroLakeTable,
-                 epoch: int, behind: list[str]):
+                 epoch: int):
         self.spark, self.main, self.epoch = spark, main, epoch
-        self._behind = behind
         self._root: DataFrame | None = None
         self._n_root: int | None = None
         self._buckets: list[int] | None = None
@@ -389,9 +294,7 @@ class EpochContext:
     @property
     def root_keys(self) -> DataFrame:
         if self._root is None:
-            self._root = staged_root_keys(
-                self.spark, self.main, self.epoch, self._behind
-            ).persist()
+            self._root = self.main.staged_keys(self.epoch).persist()
             # one fused job: materializes the persisted frame, counts
             # it, and derives its bucket ids
             self._n_root, self._buckets = count_and_buckets(
@@ -510,9 +413,11 @@ class DerivedChain:
                     ctx: EpochContext | None = None) -> MergeResult:
         """Walk the chain top-down: recompute each level's affected keys
         from its (already-caught-up) parent and MERGE. Returns the
-        level-1 result. On replay after a crash, levels already at
-        ``epoch`` no-op (their merge fence) while their affected keys
-        are still computed, so deeper levels can catch up.
+        level-1 result, ``skipped`` without touching ``ctx`` once every
+        level is at ``epoch`` (its change set may be vacuumed by then).
+        On replay after a crash, levels already at ``epoch`` no-op
+        (their merge fence) while their affected keys are still
+        computed, so deeper levels can catch up.
 
         Every level's affected-key frame is persisted for the epoch's
         duration (r06): the same frame feeds the broadcast-size probe,
@@ -522,11 +427,11 @@ class DerivedChain:
         the cross-maintainer shared frames (root keys + level-1 dirty
         rows) when several maintainers ride the same epoch; without
         one the chain builds its own and releases it on return."""
+        if all(epoch <= t.last_committed_epoch for t in self.tables):
+            return MergeResult(epoch=epoch, skipped=True)
         own_ctx = ctx is None
         if own_ctx:
-            behind = [t.path for t in self.tables
-                      if t.last_committed_epoch < epoch]
-            ctx = EpochContext(self.spark, self.main, epoch, behind)
+            ctx = EpochContext(self.spark, self.main, epoch)
         pinned: list[DataFrame] = []
         try:
             affected = ctx.root_keys

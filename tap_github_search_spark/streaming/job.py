@@ -326,6 +326,26 @@ def replay(
 
 # ------------------------------------------------------------- streaming
 
+def wal_stream(spark: SparkSession, log_dirs: list[str],
+               max_files_per_trigger: int | None,
+               schema: T.StructType | None = None) -> DataFrame:
+    """The one streaming source over the WAL dirs: a file stream per
+    dir (a file source takes one path), unioned. Every dir is read
+    under the full ``schema`` (default: ``discover_schema``), so the
+    parquet reader fills a column a dir predates with NULLs and the
+    parts align."""
+    if schema is None:
+        schema = discover_schema(spark, *log_dirs)
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    parts = [reader.parquet(d) for d in log_dirs]
+    src = parts[0]
+    for part in parts[1:]:
+        src = src.unionByName(part)
+    return src
+
+
 def stream(
     spark: SparkSession,
     log_dirs: list[str],
@@ -392,19 +412,7 @@ def stream(
         n_buckets=n_buckets,
     )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    # one source per dir, unioned: a single glob would tie the dirs'
-    # schemas; explicit union keeps each dir readable under the superset
-    src = None
-    for d in log_dirs:
-        part = reader.parquet(d)
-        for fld in schema.fields:
-            if fld.name not in part.columns:
-                part = part.withColumn(fld.name, F.lit(None).cast(fld.dataType))
-        part = part.select(*[f.name for f in schema.fields])
-        src = part if src is None else src.unionByName(part)
+    src = wal_stream(spark, log_dirs, max_files_per_trigger, schema)
     if stream_map is not None:
         src = apply_stream_map(src, stream_map)
     src = _bootstrap_cutover(table, src, log_dirs)
@@ -474,11 +482,12 @@ def stream(
         # catch-up failure FAILS the batch (no swallow): the
         # checkpoint then re-delivers and the fences retry — the
         # chaos soak showed that swallowing leaves a level
-        # permanently behind once the checkpoint commits. The
-        # nothing-staged case (empty epoch / vacuumed old stage) is
-        # handled inside staged_root_keys, which returns an empty
-        # key frame so each level fence-advances with an empty
-        # merge.
+        # permanently behind once the checkpoint commits. An epoch
+        # that staged nothing (empty batch) has no lineage rows, so
+        # ``table.staged_keys`` returns an empty key frame and each
+        # level fence-advances with an empty merge; only maintainers
+        # with a table behind run, so a vacuumed stage is read only
+        # when some table still needs it — and then it raises.
         running = [
             m for m in maintainers
             if any(t.last_committed_epoch < batch_id for t in m.tables)
@@ -492,12 +501,7 @@ def stream(
             # transform.
             from .derived import EpochContext
 
-            behind_paths = [
-                t.path for m in running for t in m.tables
-                if t.last_committed_epoch < batch_id
-            ]
-            ctx = EpochContext(table.spark, table, batch_id,
-                               behind_paths)
+            ctx = EpochContext(table.spark, table, batch_id)
             try:
                 for maintainer in running:
                     maintainer.apply_epoch(batch_id, ctx=ctx)

@@ -70,15 +70,10 @@ def stream_sessions(
     state timeout once the watermark passes. ``availableNow`` over a
     finite log closes everything except each conversation's last open
     session inside the watermark horizon."""
-    from .job import discover_schema
+    from .job import wal_stream
 
-    reader = spark.readStream.schema(discover_schema(spark, *log_dirs))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = None
-    for d in log_dirs:
-        part = reader.parquet(d).select("conv_id", "ts")
-        src = part if src is None else src.unionByName(part)
+    src = wal_stream(spark, log_dirs, max_files_per_trigger).select(
+        "conv_id", "ts")
 
     def update(
         key: Any,

@@ -58,20 +58,9 @@ def stream_window_counts(
     (max ts - watermark) is emitted; trailing windows stay open (they
     would emit on the next run) — callers compare accordingly.
     """
-    from .job import discover_schema
+    from .job import wal_stream
 
-    schema = discover_schema(spark, *log_dirs)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = None
-    for d in log_dirs:
-        part = reader.parquet(d)
-        for fld in schema.fields:
-            if fld.name not in part.columns:
-                part = part.withColumn(fld.name, F.lit(None).cast(fld.dataType))
-        part = part.select(*[f.name for f in schema.fields])
-        src = part if src is None else src.unionByName(part)
+    src = wal_stream(spark, log_dirs, max_files_per_trigger)
 
     agg = _window_agg(src.withWatermark("ts", watermark), width)
     q = (

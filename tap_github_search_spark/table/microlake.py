@@ -686,10 +686,14 @@ class MicroLakeTable:
         cache and rewrites every batch bucket), in four phases:
 
         1. ``_merge_stage``: guard, dedup and transform the batch
-           winners, write them to ``data/epoch=N`` — one pass, no persist.
+           winners, write them to the writer-unique stage dir
+           ``data/epoch=N-<tag>`` — one pass, no persist.
         2. ``_merge_quarantine``: dead-letter the expectation violators.
         3. ``_merge_lineage``: per-bucket lineage summed from the staged
-           files' parquet footers — no Spark job.
+           files' parquet footers — no Spark job. Each row names the
+           stage dir (``stage``) and commits in the epoch's own swap,
+           so ``staged_keys`` reads back exactly the files this writer
+           staged.
         4. ``_merge_rewrite_or_append``: CoW rewrites only buckets
            holding both staged and old files, through ``_rewrite`` (the
            body ``compact`` and ``migrate_step`` use); MOR appends the
@@ -702,7 +706,7 @@ class MicroLakeTable:
             batch_df, max_payload_bytes, expectations
         )
         with self._job_label(epoch, "stage"):
-            evolved, commit_tag, staged_files, counts = self._merge_stage(
+            evolved, stage, staged_files, counts = self._merge_stage(
                 batch_df, epoch, base_accept, rule_fail, winner_transform,
                 dedup,
             )
@@ -713,7 +717,7 @@ class MicroLakeTable:
         lin_rows = self._merge_lineage(staged_files)
         with self._job_label(epoch, "rewrite"):
             files = self._merge_rewrite_or_append(
-                epoch, commit_tag, staged_files, evolved, merge_mode
+                stage, staged_files, evolved, merge_mode
             )
 
         events_in = counts["events_in"]
@@ -722,7 +726,8 @@ class MicroLakeTable:
         merge_ms = int((time.monotonic() - t0) * 1000)
         committed_at = _utcnow_iso()
         lineage = [
-            {"commit_epoch": epoch, **r, "committed_at": committed_at}
+            {"commit_epoch": epoch, **r, "stage": stage,
+             "committed_at": committed_at}
             for r in lin_rows
         ]
         metrics = {
@@ -803,7 +808,7 @@ class MicroLakeTable:
         Observation on the write — the WAL batch is scanned once. The
         delete marker is ``_tombstone``'s TRUE-or-NULL ``_deleted``, so
         the staged footers carry each file's live row count
-        (``_merge_lineage``). Returns (evolved schema, commit tag,
+        (``_merge_lineage``). Returns (evolved schema, stage dir name,
         staged files, counts)."""
         from pyspark.sql import Observation
 
@@ -856,11 +861,9 @@ class MicroLakeTable:
         # writer-unique dirname: a losing concurrent writer must never
         # overwrite data files the winner's manifest already references
         # (the manifest CAS alone fires too late to protect files)
-        commit_tag = uuid.uuid4().hex[:8]
-        stage_name = f"epoch={epoch}-{commit_tag}"
-        self._write(store).parquet(os.path.join(self.path, "data",
-                                                stage_name))
-        staged_files = self._list_epoch_files(stage_name)
+        stage = f"epoch={epoch}-{uuid.uuid4().hex[:8]}"
+        self._write(store).parquet(os.path.join(self.path, "data", stage))
+        staged_files = self._list_epoch_files(stage)
         n_in, n_base = int(obs.get["n_in"]), int(obs.get["n_base"])
         counts = {
             "events_in": n_in,
@@ -871,7 +874,7 @@ class MicroLakeTable:
                 for i, name in enumerate(rule_fail)
             },
         }
-        return evolved, commit_tag, staged_files, counts
+        return evolved, stage, staged_files, counts
 
     def _merge_quarantine(self, batch_df: DataFrame, epoch: int,
                           base_accept: Column,
@@ -899,8 +902,10 @@ class MicroLakeTable:
     def _merge_lineage(staged_files: list[dict]) -> list[dict]:
         """Phase 3: per-bucket lineage from the staged files' footer
         stats (rows, ``_seq`` zone, live rows = ``_deleted`` null
-        count). The stage wrote these files one call earlier, so a
-        missing stat is a fault: raise before anything commits."""
+        count); ``merge`` adds the stage dir name to each row, which
+        makes the rows the epoch's change set (``staged_keys``). The
+        stage wrote these files one call earlier, so a missing stat is
+        a fault: raise before anything commits."""
         need = ("rows", "seq_min", "seq_max", "live_rows")
         missing = [f["path"] for f in staged_files
                    if any(k not in f for k in need)]
@@ -919,7 +924,7 @@ class MicroLakeTable:
             b["rows_deleted"] += int(f["rows"]) - int(f["live_rows"])
         return [per_bucket[b] for b in sorted(per_bucket)]
 
-    def _merge_rewrite_or_append(self, epoch: int, commit_tag: str,
+    def _merge_rewrite_or_append(self, stage: str,
                                  staged_files: list[dict],
                                  evolved: T.StructType, merge_mode: str
                                  ) -> list[dict]:
@@ -942,7 +947,7 @@ class MicroLakeTable:
             # added is not committed yet, and old files read it as NULL
             new_files += self._rewrite(
                 [f for f in old + staged_files if f["bucket"] in overlap],
-                f"epoch={epoch}-{commit_tag}.rw", schema=evolved,
+                f"{stage}.rw", schema=evolved,
             )
         return keep + new_files
 
@@ -972,8 +977,6 @@ class MicroLakeTable:
         keys the reader would otherwise see together (a whole bucket, or
         a whole old-spec bucket group); generations left outside share a
         bucket id with the output, so readers keep resolving them.
-        ``dirname`` keeps a ``.`` after ``epoch=N`` so
-        ``staged_root_keys`` never reads a rewrite as the epoch's stage.
         Returns the new file entries, uncommitted."""
         df = self._read_lww(self._cluster(self._read_files(files, schema)))
         if drop_tombstones:
@@ -2269,6 +2272,56 @@ class MicroLakeTable:
         if after_epoch is not None:
             out = [ln for ln in out if ln["commit_epoch"] > after_epoch]
         return out
+
+    def staged_keys(self, epoch: int) -> DataFrame:
+        """Distinct first merge keys (``keys[0]``) the given epoch
+        staged: the epoch's change set, the root keys of every derived
+        maintainer. The epoch's lineage rows name the stage dir and
+        buckets it committed, so exactly those ``data/<stage>/
+        _bucket=<id>`` files are read (through ``_read_files``: column
+        mapping applies) — never another writer's orphan stage of the
+        same epoch, never a listing of the data root.
+
+        Empty when the epoch has no lineage rows: an empty batch, or an
+        epoch this table never committed. Raises when the rows cannot
+        be trusted or read — the epoch's lineage was expired
+        (``expire_metadata``), a row predates the ``stage`` stamp, or a
+        named dir is gone (compacted, then vacuumed): the caller still
+        needs the epoch, and silently skipping it would drop the
+        epoch's changes from a derived table for good."""
+        fence = int(self.manifest.get("lineage_complete_after_epoch", -1))
+        if epoch <= fence:
+            raise RuntimeError(
+                f"epoch {epoch} of {self.path}: its lineage was expired "
+                f"(complete only after epoch {fence}), so its change set "
+                "is unknown; rebuild the level or raise metadata retention"
+            )
+        rows = [ln for ln in self._lineage_entries(after_epoch=epoch - 1)
+                if ln["commit_epoch"] == epoch]
+        files: list[dict] = []
+        for ln in rows:
+            if "stage" not in ln:
+                raise RuntimeError(
+                    f"epoch {epoch} of {self.path} was committed by an "
+                    "older engine whose lineage does not name its stage "
+                    "dir; rebuild the level"
+                )
+            rel = os.path.join("data", ln["stage"],
+                               f"_bucket={ln['partition_id']}")
+            full = os.path.join(self.path, rel)
+            names = (sorted(n for n in os.listdir(full)
+                            if n.endswith(".parquet"))
+                     if os.path.isdir(full) else [])
+            if not names:
+                raise RuntimeError(
+                    f"epoch {epoch} of {self.path} staged data in {rel}, "
+                    "but it has been compacted/vacuumed before every "
+                    "derived level committed the epoch; rebuild the "
+                    "level or raise vacuum grace"
+                )
+            files += [{"path": os.path.join(rel, n)} for n in names]
+        key = self.keys[0]
+        return self._read_files(files).select(key).distinct()
 
     def lineage_df(self) -> DataFrame:
         from datetime import datetime, timezone

@@ -74,6 +74,20 @@ def test_run_mode_end_to_end(spark, tmp_dir, tmp_path, monkeypatch, capsys):
     assert [r["epoch"] for r in out] == [0, 1]
     assert sum(r["rows_applied"] for r in out) > 0
 
+    # a replay config applies its expectations and dead-letters the
+    # violators into quarantine_dir
+    from tap_github_search_spark.table.microlake import MicroLakeTable
+
+    cfg.update(table=f"{tmp_dir}/t_q", quarantine_dir=f"{tmp_dir}/dlq",
+               expectations={"not_tool": "role <> 'tool'"})
+    p.write_text(json.dumps(cfg))
+    assert main(["run", "--config", str(p)]) == 0
+    capsys.readouterr()
+    metrics = MicroLakeTable.load(spark, f"{tmp_dir}/t_q").manifest["metrics"]
+    n_quarantined = sum(m["events_quarantined"] for m in metrics)
+    assert n_quarantined > 0
+    assert spark.read.parquet(f"{tmp_dir}/dlq").count() == n_quarantined
+
 
 def test_discover_emits_add_column_plan(spark, tmp_dir, capsys):
     """VERDICT r1 #10: the discovery→plan step — reading the WAL, diffing

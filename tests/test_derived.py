@@ -12,7 +12,6 @@ from tap_github_search_spark.streaming import derived
 from tap_github_search_spark.streaming.derived import (
     RollupMaintainer,
     conv_rollup,
-    staged_root_keys,
 )
 from tap_github_search_spark.streaming.job import replay
 from tests.test_engine import _events
@@ -64,7 +63,7 @@ def test_bulk_epoch_uses_shuffle_join_not_broadcast(
     # broadcast join at runtime from actual stats — that is the safe,
     # size-aware decision the guard defers to; the bug was forcing the
     # hint regardless of size)
-    affected = staged_root_keys(spark, table, results[-1].epoch, [])
+    affected = table.staged_keys(results[-1].epoch)
 
     def hinted(df):
         plan = df._jdf.queryExecution().analyzed().toString()
@@ -319,17 +318,26 @@ def test_three_level_chain_crash_between_levels_2_and_3(
     pd.testing.assert_frame_equal(got_w, exp_w, check_dtype=False)
 
 
+def _drop_stage_dirs(table, epoch: int) -> None:
+    """Delete the stage dirs the epoch's lineage rows name — what
+    ``compact`` + ``vacuum`` do to a CoW epoch's staged files."""
+    import os
+    import shutil
+
+    for ln in table._lineage_entries(after_epoch=epoch - 1):
+        if ln["commit_epoch"] == epoch:
+            shutil.rmtree(os.path.join(table.path, "data", ln["stage"]),
+                          ignore_errors=True)
+
+
 def test_vacuumed_stage_with_lagging_level_raises(spark, tmp_dir):
     """ADVICE r4: 'stage dir missing' is benign only when the epoch
     staged nothing or every level committed it. If maintenance outran
     the chain (compact dropped the staged files from the manifest, then
     vacuum deleted them) while a level still needs the epoch, the chain
     must FAIL the batch, not silently fence-advance past the epoch's
-    changes. The main table's lineage (rows ⟺ data staged) is the
-    witness."""
-    import os
-    import shutil
-
+    changes. The main table's lineage (rows ⟺ data staged, each naming
+    its stage dir) is the witness."""
     import pytest
 
     write_changelog(spark, f"{tmp_dir}/log", 60, n_files=4, delete_pct=10)
@@ -341,13 +349,7 @@ def test_vacuumed_stage_with_lagging_level_raises(spark, tmp_dir):
     # simulate vacuum deleting epoch-1's staged files while the rollup
     # level has NOT committed that epoch
     ep = results[1].epoch
-    data = os.path.join(table.path, "data")
-    pre = f"epoch={ep}-"
-    for d in list(os.listdir(data)):
-        # stage dirs only (rewrite/compact dirs carry a dotted suffix
-        # and stay manifest-referenced — vacuum would never drop those)
-        if d.startswith(pre) and "." not in d[len(pre):]:
-            shutil.rmtree(os.path.join(data, d))
+    _drop_stage_dirs(table, ep)
     with pytest.raises(RuntimeError, match="compacted/vacuumed"):
         maint.apply_epoch(ep)
 
@@ -357,3 +359,74 @@ def test_vacuumed_stage_with_lagging_level_raises(spark, tmp_dir):
     res = maint.apply_epoch(ep + 7)
     assert not res.skipped
     assert maint.child.last_committed_epoch == ep + 7
+
+
+def test_caught_up_chain_skips_without_reading_the_stage(spark, tmp_dir):
+    """A chain whose every level is at the epoch returns ``skipped``
+    before it reads the epoch's change set — so a redelivered epoch
+    whose stage was vacuumed after every level committed it does not
+    raise."""
+    write_changelog(spark, f"{tmp_dir}/log", 40, n_files=2)
+    table, results = replay(spark, [f"{tmp_dir}/log"], f"{tmp_dir}/t",
+                            n_buckets=4)
+    maint = RollupMaintainer(spark, table, f"{tmp_dir}/rollup",
+                             daily_path=f"{tmp_dir}/daily")
+    ep = results[0].epoch
+    maint.apply_epoch(ep)
+    _drop_stage_dirs(table, ep)
+    assert maint.apply_epoch(ep).skipped
+
+
+def test_staged_keys_reads_only_the_committed_stage(spark, tmp_dir):
+    """The epoch's change set comes from the stage dirs its lineage
+    names: another writer's stage for the same epoch (a CAS loser's
+    orphan, ``data/epoch=N-<other tag>/``) is never read, and lineage
+    that cannot name the stage raises instead of reading as empty."""
+    import os
+
+    import pytest
+
+    write_changelog(spark, f"{tmp_dir}/log", 40, n_files=2)
+    table, results = replay(spark, [f"{tmp_dir}/log"], f"{tmp_dir}/t",
+                            n_buckets=4)
+    ep = results[0].epoch
+    # one CoW epoch into an empty table: its files ARE the stage
+    want = {r["conv_id"] for r in
+            table.raw_df().select("conv_id").distinct().collect()}
+    orphan = os.path.join(table.path, "data", f"epoch={ep}-deadbeef",
+                          "_bucket=0")
+    foreign = table.raw_df().limit(1).withColumn(
+        "conv_id", F.lit("foreign_conv"))
+    foreign.coalesce(1).write.parquet(orphan)
+    got = {r["conv_id"] for r in table.staged_keys(ep).collect()}
+    assert got == want and "foreign_conv" not in got
+    # an epoch the table never committed has an empty change set
+    assert table.staged_keys(ep + 1).count() == 0
+    # expired lineage, or rows an older engine wrote without ``stage``
+    table.manifest["lineage_complete_after_epoch"] = ep
+    with pytest.raises(RuntimeError, match="lineage was expired"):
+        table.staged_keys(ep)
+    del table.manifest["lineage_complete_after_epoch"]
+    for ln in table.manifest["lineage"]:
+        del ln["stage"]
+    with pytest.raises(RuntimeError, match="older engine"):
+        table.staged_keys(ep)
+
+
+def test_lineage_rows_name_the_stage(spark, tmp_dir):
+    """Every lineage row of a merge names the epoch's stage dir, and
+    ``lineage_df`` keeps ``LINEAGE_SCHEMA``."""
+    import os
+
+    from tap_github_search_spark.schema import LINEAGE_SCHEMA
+
+    write_changelog(spark, f"{tmp_dir}/log", 40, n_files=2)
+    table, results = replay(spark, [f"{tmp_dir}/log"], f"{tmp_dir}/t",
+                            n_buckets=4, merge_mode="mor")
+    lin = results[0].lineage
+    assert lin and {r["stage"] for r in lin} == {lin[0]["stage"]}
+    assert lin[0]["stage"].startswith(f"epoch={results[0].epoch}-")
+    for r in lin:
+        assert os.path.isdir(os.path.join(
+            table.path, "data", r["stage"], f"_bucket={r['partition_id']}"))
+    assert table.lineage_df().schema == LINEAGE_SCHEMA

@@ -146,3 +146,21 @@ def test_engine_reads_no_derived_manifest_flag():
             if isinstance(key, ast.Constant) and key.value in DERIVED_KEYS:
                 reads.append(f"{rel}:{node.lineno}")
     assert not reads, reads
+
+
+def test_stage_layout_lives_in_the_table_module():
+    """Only ``table/microlake.py`` knows where an epoch's staged files
+    live (``data/epoch=N-<tag>``); every other module asks
+    ``MicroLakeTable.staged_keys``. A string constant or f-string part
+    starting with ``epoch=`` elsewhere is a second copy of that
+    layout."""
+    hits = []
+    for rel, tree in _engine_trees():
+        if rel == pathlib.Path("table", "microlake.py"):
+            continue
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and node.value.startswith("epoch=")):
+                hits.append(f"{rel}:{node.lineno}")
+    assert not hits, hits

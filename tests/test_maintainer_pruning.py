@@ -18,7 +18,6 @@ from tap_github_search_spark.streaming.derived import (
     conv_rollup,
     daily_rollup,
     maybe_broadcast,
-    staged_root_keys,
 )
 from tap_github_search_spark.streaming.job import replay
 from tap_github_search_spark.streaming.joinview import (
@@ -81,7 +80,7 @@ def test_maintainer_epoch_probe_is_bucket_pruned(spark, tmp_dir):
                          "updated text", None)]),
         epoch=1,
     )
-    keys = staged_root_keys(spark, table, 1, [])
+    keys = table.staged_keys(1)
     ids = bucket_ids_of(keys, "conv_id", table.n_buckets)
     assert ids is not None and len(ids) == 1
     # every bucket affected → None: a full restriction prunes nothing
@@ -119,7 +118,7 @@ def test_epoch_context_paths_match_full_recompute(spark, tmp_dir):
                          daily_path=f"{tmp_dir}/daily_b")
     for r in results:
         a.apply_epoch(r.epoch)
-        ctx = EpochContext(spark, table, r.epoch, [])
+        ctx = EpochContext(spark, table, r.epoch)
         try:
             b.apply_epoch(r.epoch, ctx=ctx)
         finally:
