@@ -953,6 +953,17 @@ class MicroLakeTable:
 
     # ---------------- maintenance ----------------
 
+    def _file_bytes(self, f: dict) -> int:
+        """A data file's size: recorded at commit from the footer read,
+        ``os.stat`` for an entry committed before sizes were recorded
+        (0 when the file is gone)."""
+        if "bytes" in f:
+            return f["bytes"]
+        try:
+            return os.path.getsize(os.path.join(self.path, f["path"]))
+        except OSError:
+            return 0
+
     def _files_by_bucket(self) -> dict[int, list[dict]]:
         """The manifest's data files grouped by bucket id — the one
         per-bucket view behind ``compact``, ``optimize`` and
@@ -1198,7 +1209,7 @@ class MicroLakeTable:
         state is one bookmark blob per stream,
         /root/reference/tap_github/client.py:83-101).
 
-        Decision inputs are ``stats()`` and the per-bucket file counts —
+        Decision inputs are the manifest's per-bucket file lists —
         O(files) driver-side work, NO data scan and NO Spark job unless
         an action actually fires. Every action is bounded, so the same
         policy runs out-of-band (``maintain``) and inside a stream
@@ -1206,7 +1217,8 @@ class MicroLakeTable:
 
         1. **Spec evolution** — while a migration is pending, one
            ``migrate_step`` of at most ``compact_batch`` old-spec
-           bucket groups. Otherwise, when the average bucket size is
+           bucket groups. Otherwise, when the average bucket size (a
+           bucket sized by its largest file, what compaction keeps) is
            above ``target_bucket_bytes`` (per-bucket rewrite cost and
            per-task state drifting up), ``rebucket_start`` to the next
            power of two that restores the target — metadata-only; the
@@ -1233,10 +1245,16 @@ class MicroLakeTable:
             "vacuumed_files": 0,
             "dry_run": dry_run,
         }
-        pileup = sum(1 for fs in self._files_by_bucket().values()
+        by_bucket = self._files_by_bucket()
+        pileup = sum(1 for fs in by_bucket.values()
                      if len(fs) > max_generations)
-        total_bytes = report["total_bytes"] = self.stats()["total_bytes"]
-        per_bucket = total_bytes / max(1, self.n_buckets)
+        report["total_bytes"] = self.stats()["total_bytes"]
+        # growth sizes each bucket by its largest file, the least a
+        # compaction keeps: superseded MOR generations are compaction's
+        # to drop, not a reason to split the bucket
+        live_bytes = sum(max(map(self._file_bytes, fs))
+                         for fs in by_bucket.values())
+        per_bucket = live_bytes / max(1, self.n_buckets)
 
         # Maintenance runs concurrently with ingest in production; every
         # action commits via the manifest CAS, so a racing merge can win
@@ -1257,7 +1275,7 @@ class MicroLakeTable:
                     report["actions"].append("migrate_step lost commit race")
         elif per_bucket > target_bucket_bytes:
             new_n = self.n_buckets
-            while total_bytes / new_n > target_bucket_bytes:
+            while live_bytes / new_n > target_bucket_bytes:
                 new_n *= 2
             report["actions"].append(
                 f"rebucket_start {self.n_buckets}->{new_n} "
@@ -1393,15 +1411,6 @@ class MicroLakeTable:
         per_bucket = self._files_by_bucket()
         old_spec = sum(1 for f in files
                        if self._file_spec(f) != self.n_buckets)
-
-        def _bytes(f: dict) -> int:
-            if "bytes" in f:  # recorded at commit from the footer read
-                return f["bytes"]
-            try:
-                return os.path.getsize(os.path.join(self.path, f["path"]))
-            except OSError:
-                return 0
-
         return {
             "version": self.manifest["version"],
             "last_committed_epoch": self.last_committed_epoch,
@@ -1411,7 +1420,7 @@ class MicroLakeTable:
             "max_generations": max(map(len, per_bucket.values()),
                                    default=0),
             "total_rows": sum(f.get("rows", 0) for f in files),
-            "total_bytes": sum(map(_bytes, files)),
+            "total_bytes": sum(map(self._file_bytes, files)),
             "read_dedup": self._needs_resolve(files),
             "migration_pending": old_spec > 0,
             "old_spec_files": old_spec,
@@ -1828,29 +1837,24 @@ class MicroLakeTable:
         read cost is table_size / n_buckets regardless of table size.
         The bucket hash is computed driver-side in pure Python (parity
         with ``F.hash`` is test-enforced) — a point lookup must not
-        cost a Spark job just to hash one key."""
-        h = murmur3_x86_32(key_value.encode("utf-8"))
-        # bucket pruning first, then file-level zone maps: a bucket can
-        # hold many generations of files; footer min/max skips the ones
-        # that provably don't contain the key. During a progressive
-        # spec migration each file is addressed under ITS OWN spec
-        # (old-spec files keep answering point reads correctly).
-        files = [
-            f for f in self.manifest["files"]
-            if f["bucket"] == h % self._file_spec(f)
-            and self._zone_covers(f, key_value)
-        ]
-        where = F.col(self.keys[0]) == key_value
+        cost a Spark job just to hash one key. It is ``scan_keys`` of
+        one key (Catalyst rewrites the one-element ``isin`` to ``=``)
+        plus the optional second-key filter."""
+        df = self.scan_keys([key_value])
         if turn_idx is not None and len(self.keys) > 1:
-            where = where & (F.col(self.keys[1]) == turn_idx)
-        return self._live(files, where)
+            df = df.filter(F.col(self.keys[1]) == turn_idx)
+        return df
 
     def scan_keys(self, key_values: list[str]) -> DataFrame:
         """Bucket-pruned multi-key read: hash every key driver-side,
-        read only the union of their buckets' files, then filter — the
-        batch generalization of ``lookup``. For K keys over B buckets
-        the read cost is ≤ min(K, B)/B of the table, independent of
-        table size."""
+        read only the union of their buckets' files, then filter. For K
+        keys over B buckets the read cost is ≤ min(K, B)/B of the
+        table, independent of table size. Bucket pruning first, then
+        file-level zone maps: a bucket can hold many generations of
+        files, and footer min/max skips the ones that provably don't
+        contain a key. During a progressive spec migration each file
+        is addressed under ITS OWN spec (old-spec files keep answering
+        point reads correctly)."""
         hashes = {k: murmur3_x86_32(k.encode("utf-8")) for k in key_values}
         files = [
             f for f in self.manifest["files"]

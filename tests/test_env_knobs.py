@@ -164,3 +164,37 @@ def test_stage_layout_lives_in_the_table_module():
                     and node.value.startswith("epoch=")):
                 hits.append(f"{rel}:{node.lineno}")
     assert not hits, hits
+
+
+def test_streaming_layer_has_no_join_strategy_policy():
+    """Spark picks the maintainers' join strategies from its own size
+    estimates (``autoBroadcastJoinThreshold``, then AQE). No module
+    under ``streaming/`` forces a broadcast (``F.broadcast`` or a bare
+    ``broadcast``), keeps a ``BROADCAST_KEYS`` cap, or runs a
+    ``limit(...).count()`` size probe."""
+    hits = []
+    for rel, tree in _engine_trees():
+        if rel.parts[0] != "streaming":
+            continue
+        for node in ast.walk(tree):
+            where = f"{rel}:{getattr(node, 'lineno', '?')}"
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = (f.attr if isinstance(f, ast.Attribute)
+                        else f.id if isinstance(f, ast.Name) else None)
+                if name == "broadcast":
+                    hits.append(f"broadcast call at {where}")
+                if (name == "count" and isinstance(f, ast.Attribute)
+                        and isinstance(f.value, ast.Call)
+                        and isinstance(f.value.func, ast.Attribute)
+                        and f.value.func.attr == "limit"):
+                    hits.append(f"limit(...).count() probe at {where}")
+            targets = (node.targets if isinstance(node, ast.Assign)
+                       else [node.target]
+                       if isinstance(node, (ast.AnnAssign, ast.AugAssign))
+                       else [])
+            for t in targets:
+                if getattr(t, "id", getattr(t, "attr", None)) == \
+                        "BROADCAST_KEYS":
+                    hits.append(f"BROADCAST_KEYS assigned at {where}")
+    assert not hits, hits

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from tap_github_search_spark.streaming.job import replay
 from tap_github_search_spark.table.microlake import MicroLakeTable
 from tests.test_engine import _events
@@ -75,12 +77,18 @@ def test_optimize_starts_migration_on_growth_and_compacts(spark, tmp_dir):
     assert after == before
 
 
-def test_stream_optimize_never_rebuckets_inline(spark, tmp_dir):
+@pytest.mark.parametrize("newest", [None, "part-00000"],
+                         ids=["as_written", "part-00000_newest"])
+def test_stream_optimize_never_rebuckets_inline(spark, tmp_dir, newest):
     """The streaming loop's optimize_every never rewrites the whole
     table in one go: a growth trigger (2 -> 4 buckets here) starts a
     metadata-only migration, and every in-stream ``migrate`` commit
     rewrites at most ``compact_batch`` old-spec bucket groups. The
-    final table equals the full-replay oracle."""
+    final table equals the full-replay oracle. The stream reads WAL
+    files oldest first, so touching ``part-00000`` newest lands the
+    first seq range last: buckets then still hold migration-era
+    generations when growth is checked, which must not start a second
+    ``rebucket_start``."""
     import json
 
     from tap_github_search_spark.sources.generator import write_changelog
@@ -88,6 +96,14 @@ def test_stream_optimize_never_rebuckets_inline(spark, tmp_dir):
     from tests.test_engine import _assert_table_equals_oracle
 
     write_changelog(spark, f"{tmp_dir}/log", 60, n_files=6)
+    if newest is not None:
+        log = f"{tmp_dir}/log"
+        parts = [os.path.join(log, p) for p in os.listdir(log)
+                 if p.endswith(".parquet")]
+        latest = max(os.path.getmtime(p) for p in parts)
+        (first,) = [p for p in parts
+                    if os.path.basename(p).startswith(newest)]
+        os.utime(first, (latest + 10, latest + 10))
     ref, _ = replay(spark, [f"{tmp_dir}/log"], f"{tmp_dir}/ref",
                     n_buckets=2)
     # a full table spread over 3 buckets' worth of target: 2 buckets
