@@ -34,8 +34,10 @@ At 100 TB: the dim-side scan of the fact is paid only in epochs where
 the dim actually changed; the fact-side recompute is O(affected
 conversations) like every maintainer. Spark picks every join's
 strategy from its inputs' sizes (``autoBroadcastJoinThreshold``, then
-AQE at runtime): a small dimension or changed-key set is broadcast, a
-genuinely large one is shuffled.
+AQE at runtime): every key frame is persisted and materialized before
+its first join, so a small dimension or changed-key set is broadcast
+(map-side, the fact is not shuffled) and a genuinely large one is
+shuffled.
 """
 
 from __future__ import annotations
@@ -100,9 +102,15 @@ class JoinViewMaintainer:
 
     # ---------------- per-epoch maintenance ----------------
 
-    def _dim_dirty_fact_keys(self, dv_seen: int) -> DataFrame:
+    def _dim_dirty_fact_keys(self, dv_seen: int,
+                             pinned: list[DataFrame]) -> DataFrame:
         """Fact root keys whose dim row changed since the view last
-        consumed the dim (net changes via ``change_feed``). A vacuumed
+        consumed the dim (net changes via ``change_feed``). The changed
+        join keys are persisted (appended to ``pinned``) and counted
+        before the fact join: the count materializes them, so Spark
+        plans that join from their real size — a few changed keys are
+        broadcast and the fact snapshot is not shuffled — instead of
+        from the change feed's full-outer-join estimate. A vacuumed
         ``dv_seen`` manifest (FileNotFoundError) degrades to a FULL
         re-enrich — every fact root key — which is correct at any
         retention state, just not incremental."""
@@ -110,10 +118,12 @@ class JoinViewMaintainer:
         try:
             changed = (
                 self.dim.change_feed(from_version=dv_seen)
-                .select(self.join_col).distinct()
+                .select(self.join_col).distinct().persist()
             )
         except FileNotFoundError:
             return self.fact.snapshot_df().select(root).distinct()
+        pinned.append(changed)
+        changed.count()
         return (
             self.fact.snapshot_df().join(changed, self.join_col)
             .select(root).distinct()
@@ -148,7 +158,7 @@ class JoinViewMaintainer:
                     # cheaper and equivalent on an empty view: all roots
                     dirty = self.fact.snapshot_df().select(root).distinct()
                 else:
-                    dirty = self._dim_dirty_fact_keys(dv_seen)
+                    dirty = self._dim_dirty_fact_keys(dv_seen, pinned)
                 aff = aff.unionByName(dirty).distinct().persist()
                 pinned.append(aff)
 

@@ -1218,8 +1218,9 @@ class MicroLakeTable:
         1. **Spec evolution** — while a migration is pending, one
            ``migrate_step`` of at most ``compact_batch`` old-spec
            bucket groups. Otherwise, when the average bucket size (a
-           bucket sized by its largest file, what compaction keeps) is
-           above ``target_bucket_bytes`` (per-bucket rewrite cost and
+           bucket sized by its largest file, a lower bound on its live
+           size until it is compacted) is above
+           ``target_bucket_bytes`` (per-bucket rewrite cost and
            per-task state drifting up), ``rebucket_start`` to the next
            power of two that restores the target — metadata-only; the
            following runs migrate.
@@ -1248,10 +1249,14 @@ class MicroLakeTable:
         by_bucket = self._files_by_bucket()
         pileup = sum(1 for fs in by_bucket.values()
                      if len(fs) > max_generations)
-        report["total_bytes"] = self.stats()["total_bytes"]
-        # growth sizes each bucket by its largest file, the least a
-        # compaction keeps: superseded MOR generations are compaction's
-        # to drop, not a reason to split the bucket
+        report["total_bytes"] = sum(map(self._file_bytes,
+                                        self.manifest["files"]))
+        # growth sizes each bucket by its largest file: superseded MOR
+        # generations are compaction's to drop, not a reason to split
+        # the bucket. Until a bucket is compacted this is a lower bound
+        # on its live size (generations holding disjoint keys add up),
+        # so such a bucket counts in full once the pileup rule below
+        # has compacted it
         live_bytes = sum(max(map(self._file_bytes, fs))
                          for fs in by_bucket.values())
         per_bucket = live_bytes / max(1, self.n_buckets)

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import os
+import random
+import string
 
 import pytest
 
@@ -74,6 +76,42 @@ def test_optimize_starts_migration_on_growth_and_compacts(spark, tmp_dir):
     assert not t2.stats()["read_dedup"]
     assert t2.n_buckets == rep["rebucketed_to"]  # no second growth step
     after = t2.snapshot_df().orderBy("conv_id", "turn_idx").collect()
+    assert after == before
+
+
+def test_optimize_grows_disjoint_mor_generations_once_compacted(
+        spark, tmp_dir, monkeypatch):
+    """Growth sizes a bucket by its largest file, a lower bound on its
+    live size while MOR generations hold disjoint keys (append-style
+    traffic): such generations add up. The pileup rule compacts them
+    in the same round, and the next round sees the bucket's full size
+    and starts the growth."""
+    monkeypatch.setattr(MicroLakeTable, "BLOOM_NDV", 0)  # no per-file bloom
+    table = _seed(spark, tmp_dir)
+    rnd = random.Random(7)  # incompressible text: bytes ~ rows
+    for e in range(1, 6):  # five generations, each on new keys
+        rows = [(1000 * e + i, "I", f"e{e}-{i:03d}", 0, 1000 * e + i,
+                 "".join(rnd.choices(string.ascii_lowercase, k=100)))
+                for i in range(200)]
+        table.merge(_events(spark, rows), epoch=e, merge_mode="mor")
+    before = table.snapshot_df().orderBy("conv_id", "turn_idx").collect()
+    # half the files' total per bucket: each bucket's largest file
+    # (about a fifth of its bytes) stays under it, the bucket compacted
+    # into one file goes over it
+    target = table.stats()["total_bytes"] // (2 * table.n_buckets)
+
+    rep = table.optimize(target_bucket_bytes=target, max_generations=1,
+                         keep_versions=100)
+    assert not any(a.startswith("rebucket_start") for a in rep["actions"])
+    assert rep["compacted_buckets"] == table.n_buckets
+
+    t2 = MicroLakeTable.load(spark, table.path)
+    rep2 = t2.optimize(target_bucket_bytes=target, max_generations=1,
+                       keep_versions=100)
+    assert any(a.startswith("rebucket_start") for a in rep2["actions"])
+    assert rep2["rebucketed_to"] > table.n_buckets
+    t3 = MicroLakeTable.load(spark, table.path)
+    after = t3.snapshot_df().orderBy("conv_id", "turn_idx").collect()
     assert after == before
 
 
